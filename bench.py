@@ -133,7 +133,8 @@ def main() -> None:
         "method": "min of 5 timed runs per query (the first timed run "
         "absorbs that query's codegen; one global JVM warmup pass runs "
         "before any timing); medians reported to separate plan "
-        "regressions from scheduler noise",
+        "regressions from scheduler noise; queries_cold is each query's "
+        "timed run 1, so it includes that query's codegen and JIT",
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
         "host_load_start": load_start,
         "host_load_end": _host_load(),

@@ -98,21 +98,21 @@ def parquet_column_bounds(sf_dir: str, name: str, column: str):
     """(min, max) of a column from parquet FOOTER statistics — no Spark
     job, so plan-time eligibility checks (e.g. "do these ids fit an int64
     pack?") cost ~ms even inside a timed bench run. Returns None when any
-    row group lacks min/max stats or the probe fails; callers must fall
-    back to an always-correct unpacked path."""
+    row group lacks min/max stats, when a bound is not an integer (string
+    ids), when the table directory holds a subdirectory (a partitioned
+    layout whose nested files this probe does not read), or when the probe
+    fails; callers must fall back to an always-correct unpacked path."""
     import pyarrow.parquet as pq
 
     path = table_path(sf_dir, name)
     try:
-        files = (
-            [
-                os.path.join(path, f)
-                for f in os.listdir(path)
-                if f.endswith(".parquet")
-            ]
-            if os.path.isdir(path)
-            else [path]
-        )
+        if os.path.isdir(path):
+            entries = list(os.scandir(path))
+            if any(e.is_dir() for e in entries):
+                return None
+            files = [e.path for e in entries if e.name.endswith(".parquet")]
+        else:
+            files = [path]
         lo, hi = None, None
         for f in files:
             md = pq.read_metadata(f)
@@ -123,7 +123,9 @@ def parquet_column_bounds(sf_dir: str, name: str, column: str):
                     return None
                 lo = st.min if lo is None else min(lo, st.min)
                 hi = st.max if hi is None else max(hi, st.max)
-        return None if lo is None else (lo, hi)
+        if type(lo) is not int or type(hi) is not int:
+            return None
+        return lo, hi
     except Exception:  # noqa: BLE001 — stats probe must never break a plan
         return None
 

@@ -1,7 +1,8 @@
 """Prove the registry's round() signed-zero rewrite is value-lossless.
 
-For every registered oracle, run the RAW SQL and the REWRITTEN SQL
-(``normalize_round_signed_zero``) on the same DuckDB views and require:
+For every registered oracle, run the SQL before and after the round
+rewrite (``materialize_shared_ctes(qd.raw_oracle)`` vs ``qd.oracle``, which
+adds ``normalize_round_signed_zero``) on the same DuckDB views and require:
 
 - identical column names and pandas dtypes (the wrap must not widen
   DECIMAL into DOUBLE or similar — DuckDB types ``DECIMAL(p,s) + 0.0``
@@ -32,12 +33,7 @@ def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     out_path = sys.argv[2] if len(sys.argv) > 2 else "/tmp/audit_round_rewrite.json"
 
-    rewrite = reg.normalize_round_signed_zero
-    reg.normalize_round_signed_zero = lambda s: s  # register RAW oracles
-    try:
-        registry = reg.load_all_queries()
-    finally:
-        reg.normalize_round_signed_zero = rewrite
+    registry = reg.load_all_queries()
 
     import duckdb
 
@@ -52,10 +48,10 @@ def main() -> None:
     out: dict[str, object] = {}
     n_pass = n_fail = n_norm = 0
     for name, qd in registry.items():
-        if qd.oracle is None:
+        if qd.raw_oracle is None:
             continue
-        raw_sql = qd.oracle
-        new_sql = rewrite(raw_sql)
+        raw_sql = reg.materialize_shared_ctes(qd.raw_oracle)
+        new_sql = qd.oracle
         if new_sql == raw_sql:
             out[name] = {"status": "pass", "rounds": 0}
             n_pass += 1

@@ -34,8 +34,9 @@ registry = load_all_queries()
 names = json.loads(sys.argv[2]) if sys.argv[2] != "ALL" else sorted(
     n for n, qd in registry.items() if qd.headline)
 runs = int(sys.argv[3])
-# global warmup
-registry[names[0]].fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+# global warmup, on the first requested name this checkout registers
+warm = next(n for n in names if n in registry)
+registry[warm].fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
 out = {}
 for n in names:
     if n not in registry:

@@ -7,6 +7,8 @@ The failure modes this guards: rewriting a WINDOW-clause definition
 (MATERIALIZED is invalid there), and non-idempotence (the registry
 applies it exactly once, but double application must be safe)."""
 
+import duckdb
+
 from iceberg_classifier_spark.plans.registry import materialize_shared_ctes
 
 
@@ -80,3 +82,20 @@ def test_comment_before_body():
         "(SELECT * FROM g JOIN g x USING(a)) SELECT * FROM h"
     )
     assert "g AS MATERIALIZED" in materialize_shared_ctes(s)
+
+
+def test_self_referencing_member_of_recursive_list_skipped():
+    # only `mid` may be pinned: `seed` heads the RECURSIVE list and `walk`
+    # references itself; the 'mid' literal is no self-reference
+    s = (
+        "WITH RECURSIVE seed AS (SELECT 1 AS n), "
+        "mid AS (SELECT n, 'mid' AS tag FROM seed), "
+        "walk AS (SELECT n FROM mid UNION ALL SELECT n + 1 FROM walk "
+        "WHERE n < 3) "
+        "SELECT count(*) FROM walk JOIN walk w2 USING (n) JOIN mid "
+        "USING (n) JOIN seed USING (n)"
+    )
+    r = materialize_shared_ctes(s)
+    assert r == s.replace("mid AS (", "mid AS MATERIALIZED(")
+    con = duckdb.connect()
+    assert con.execute(r).fetchall() == con.execute(s).fetchall()

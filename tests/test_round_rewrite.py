@@ -71,3 +71,26 @@ def test_decimal_type_preserved():
         f"SELECT typeof(g) FROM ({normalize_round_signed_zero(raw)})"
     ).fetchone()[0]
     assert t_raw == t_new == "DECIMAL(38,2)"
+
+
+def test_escaped_quote_literal_untouched():
+    s = "SELECT 'it''s round(x) (' AS s, round(y, 1) FROM t"
+    r = normalize_round_signed_zero(s)
+    assert r == "SELECT 'it''s round(x) (' AS s, (round(y, 1) + 0.0) FROM t"
+
+
+def test_unclosed_round_left_as_written():
+    s = "SELECT round(x, 2 FROM t"
+    assert normalize_round_signed_zero(s) == s
+    r = normalize_round_signed_zero("SELECT round(round(x, 2) FROM t")
+    assert r == "SELECT round((round(x, 2) + 0.0) FROM t"
+
+
+def test_qualified_quoted_and_prefixed_names_untouched():
+    s = 'SELECT t.round(x), "round"(y), _round(z) FROM t'
+    assert normalize_round_signed_zero(s) == s
+
+
+def test_newline_before_paren():
+    r = normalize_round_signed_zero("SELECT round\n(x, 2) FROM t")
+    assert r == "SELECT (round\n(x, 2) + 0.0) FROM t"

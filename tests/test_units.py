@@ -632,3 +632,75 @@ def test_mtld_packed_fold_bounds_and_equivalence():
         assert (acc // _MTLD_P30) % _MTLD_P15 == int(ty)
         assert (acc // _MTLD_P15) % _MTLD_P15 == int(tk)
         assert acc % _MTLD_P15 == int(fac)
+
+
+def test_registry_load_does_no_oracle_rewrite():
+    """Importing and ordering the registry must not rewrite any oracle:
+    both rewrites are replaced by a raiser before a fresh interpreter
+    imports every plan module."""
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    code = (
+        "import iceberg_classifier_spark.plans.registry as reg\n"
+        "def boom(sql):\n"
+        "    raise AssertionError('oracle rewritten during registry load')\n"
+        "reg.materialize_shared_ctes = reg.normalize_round_signed_zero = boom\n"
+        "print(len(reg.load_all_queries()))\n"
+    )
+    r = subprocess.run(
+        [sys.executable, "-c", code],
+        capture_output=True,
+        text=True,
+        cwd=Path(__file__).resolve().parents[1],
+    )
+    assert r.returncode == 0, r.stderr[-2000:]
+    assert int(r.stdout.split()[-1]) > 500
+
+
+def test_oracle_read_rewrites_once_and_caches():
+    from iceberg_classifier_spark.plans.registry import (
+        load_all_queries,
+        materialize_shared_ctes,
+        normalize_round_signed_zero,
+    )
+
+    for name, qd in load_all_queries().items():
+        if qd.raw_oracle is None:
+            assert qd.oracle is None, name
+            continue
+        first = qd.oracle
+        assert qd.oracle is first, name
+        assert first == normalize_round_signed_zero(
+            materialize_shared_ctes(qd.raw_oracle)
+        ), name
+
+
+def _write_ids(path, ids):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pq.write_table(pa.table({"doc_id": ids}), str(path))
+
+
+def test_parquet_column_bounds_string_ids_fall_back(tmp_path):
+    from iceberg_classifier_spark.sources.tables import parquet_column_bounds
+
+    _write_ids(tmp_path / "documents.parquet", ["d10", "d2", "d7"])
+    assert parquet_column_bounds(str(tmp_path), "documents", "doc_id") is None
+    _write_ids(tmp_path / "documents.parquet", [10, 2, 7])
+    assert parquet_column_bounds(str(tmp_path), "documents", "doc_id") == (2, 10)
+
+
+def test_parquet_column_bounds_nested_layout_falls_back(tmp_path):
+    from iceberg_classifier_spark.sources.tables import parquet_column_bounds
+
+    table = tmp_path / "documents.parquet"
+    table.mkdir()
+    _write_ids(table / "part-0.parquet", [1, 5])
+    _write_ids(table / "part-1.parquet", [3, 9])
+    assert parquet_column_bounds(str(tmp_path), "documents", "doc_id") == (1, 9)
+    (table / "lang=en").mkdir()
+    _write_ids(table / "lang=en" / "part-0.parquet", [1, 1 << 40])
+    assert parquet_column_bounds(str(tmp_path), "documents", "doc_id") is None
