@@ -1,16 +1,22 @@
 """Public, reusable entry points for the engine's pipeline families.
 
 The query registry (``plans/``) binds every operator to the benchmark star
-schema; these functions are the same constructions parameterized over a
-user-supplied DataFrame and column names, so running e.g. MinHash dedup on
-your own corpus does not require reading plans/dedup.py (round-6 verdict
-task 7). Each function returns a lazy DataFrame — compose, then write.
+schema; these functions are parameterized over a user-supplied DataFrame
+and column names, so running e.g. MinHash dedup on your own corpus does
+not require reading plans/dedup.py. Each function returns a lazy
+DataFrame — compose, then write.
 
-Scale notes carry over from the registered twins: signatures are per-row
-array math (no shuffle), candidate generation shuffles only (id, band,
-band_hash) triples, decontamination broadcasts only a genuinely small eval
-side, and budget selection uses the two-level distributed prefix sum
-instead of a global sort.
+The MinHash/LSH functions below are the only Spark-side MinHash code in
+the package: the registered ``dedup_minhash_lsh``,
+``streaming_minhash_dedup``, ``dedup_minhash_skewed`` and
+``minhash_lsh_quality`` queries call them with their own parameters, so
+library output is oracle-checked through those queries. The other
+families here are parameterized versions of their registered twins.
+
+Scale notes: signatures are per-row array math (no shuffle), candidate
+generation shuffles only (id, band, band_hash) triples, decontamination
+broadcasts only a genuinely small eval side, and budget selection uses the
+two-level distributed prefix sum instead of a global sort.
 
 >>> from iceberg_classifier_spark import api
 >>> pairs = api.minhash_dedup_pairs(corpus, text_col="body", id_col="url")
@@ -19,7 +25,7 @@ instead of a global sort.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from iceberg_classifier_spark.functions import text as T
@@ -40,21 +46,15 @@ from iceberg_classifier_spark.operators.stacking import (  # noqa: F401
     stack_stats,
 )
 
-# Broder universal-hash family — the same literal (a, b) tables the
-# registered dedup_minhash_lsh shares with its DuckDB oracle.
-MH_P = 2305843009213693951  # 2^61 - 1
+# Broder universal-hash family h_i(x) = (a_i·x + b_i) mod MH_P over a
+# 32-bit md5-prefix base hash x. Odd multipliers / offsets from the repo's
+# LCG: a_i < 2^31, b_i < 2^31 and x < 2^32 keep a_i·x + b_i < 2^63, so
+# every member is exact int64 on both Spark and DuckDB. The registered
+# MinHash oracles (plans/dedup.py) print their literal (a, b) lists from
+# these tables.
+MH_P = 4294967311  # first prime above 2^32
 _MH_A = [2 * ((1103515245 * (i + 1) + 12345) % 1073741823) + 1 for i in range(64)]
 _MH_B = [(1103515245 * (i + 101) + 12345) % 2147483648 for i in range(64)]
-
-
-def _base_hashes(text: Column, shingle_n: int) -> Column:
-    """One md5-prefix base hash per ``shingle_n``-token shingle — the
-    family members below reuse it, so crypto-hash work is per shingle,
-    not per (seed, shingle)."""
-    sh = T.shingles(T.tokens(text), shingle_n)
-    return F.transform(
-        sh, lambda s: F.conv(F.substring(F.md5(s), 1, 8), 16, 10).cast("bigint")
-    )
 
 
 def minhash_signatures(
@@ -66,29 +66,69 @@ def minhash_signatures(
 ) -> DataFrame:
     """Per-document MinHash signature: ``(id_col, sig array<bigint>)``.
 
-    h_i(s) = (a_i · md5_32(s) + b_i) mod p over token shingles — per-row
-    array math, no explode, no shuffle. Documents with fewer than
-    ``shingle_n`` tokens (no shingles) are dropped.
+    h_i(s) = (a_i · md5_32(s) + b_i) mod MH_P over distinct token
+    shingles — one md5-prefix base hash per shingle, reused by every
+    family member, so crypto-hash work is per shingle, not per (seed,
+    shingle). Per-row array math, no explode, no shuffle. Documents with
+    fewer than ``shingle_n`` tokens (no shingles) are dropped. This is
+    the signature every registered MinHash query runs, bit for bit what
+    their DuckDB oracles rebuild.
     """
     if n_hashes > len(_MH_A):
         raise ValueError(f"n_hashes > {len(_MH_A)} not supported")
-    hs = df.select(
-        F.col(id_col), _base_hashes(F.col(text_col), shingle_n).alias("hv")
-    ).where(F.size("hv") > 0)
+    # tokens, base hashes and signatures each get their own projection,
+    # so every shingle slice reuses one split and the family members
+    # reuse the base hashes instead of re-hashing
+    toks = df.select(F.col(id_col), T.tokens(F.col(text_col)).alias("toks"))
+    sh = toks.select(
+        id_col, T.shingles(F.col("toks"), shingle_n).alias("sh")
+    ).where(F.size("sh") > 0)
+    hs = sh.select(
+        id_col,
+        F.transform(
+            "sh",
+            lambda s: F.conv(F.substring(F.md5(s), 1, 8), 16, 10).cast("bigint"),
+        ).alias("hv"),
+    )
+
+    def member(i):
+        # one-arg lambda (a two-arg lambda would make F.transform pass the
+        # element index as the second parameter)
+        return lambda h: (F.lit(_MH_A[i]) * h + F.lit(_MH_B[i])) % F.lit(MH_P)
+
     return hs.select(
         id_col,
         F.array(
-            *[
-                F.array_min(
-                    F.transform(
-                        "hv",
-                        (lambda i: lambda h: (F.lit(_MH_A[i]) * h + F.lit(_MH_B[i])) % F.lit(MH_P))(i),
-                    )
-                )
-                for i in range(n_hashes)
-            ]
+            *[F.array_min(F.transform("hv", member(i))) for i in range(n_hashes)]
         ).alias("sig"),
     )
+
+
+def minhash_band_keys(
+    sig: DataFrame, id_col: str = "doc_id", n_hashes: int = 32, bands: int = 8
+) -> DataFrame:
+    """LSH band keys of a ``minhash_signatures`` frame:
+    ``(id_col, band, band_hash)``, one row per band. ``band_hash`` is the
+    band's ``n_hashes // bands`` minhashes joined with ","; documents
+    sharing a (band, band_hash) bucket are near-duplicate candidates.
+    Only these rows need to shuffle — never the full signatures.
+    """
+    if n_hashes % bands:
+        raise ValueError("bands must divide n_hashes")
+    rows_per_band = n_hashes // bands
+    band_arr = F.array(
+        *[
+            F.concat_ws(
+                ",",
+                *[
+                    F.element_at(F.col("sig"), b * rows_per_band + r + 1).cast("string")
+                    for r in range(rows_per_band)
+                ],
+            )
+            for b in range(bands)
+        ]
+    )
+    return sig.select(F.col(id_col), F.posexplode(band_arr).alias("band", "band_hash"))
 
 
 def minhash_dedup_pairs(
@@ -108,7 +148,9 @@ def minhash_dedup_pairs(
     Banding: docs sharing any of ``bands`` band buckets become candidates;
     est_jaccard is the fraction of equal minhashes. Only (id, band,
     band_hash) triples shuffle — the n_hashes-long signatures rejoin the
-    (small) deduped candidate set afterwards.
+    (small) deduped candidate set afterwards. The registered
+    ``dedup_minhash_lsh`` is this function at ``bucket_cap=None,
+    cache_signatures=True``, rounded to 6 places.
 
     HOT-BUCKET CONTROL (``bucket_cap``, default 64): a band bucket with
     ≤ ``bucket_cap`` members enumerates all its pairs; a bigger bucket
@@ -142,29 +184,12 @@ def minhash_dedup_pairs(
     via ``spark.catalog.clearCache()`` (or persist ``df`` yourself) when
     you own the session's cache lifecycle.
     """
-    if n_hashes % bands:
-        raise ValueError("bands must divide n_hashes")
     if bucket_cap is not None and bucket_cap < 1:
         raise ValueError("bucket_cap must be >= 1 (or None to disable)")
-    rows_per_band = n_hashes // bands
     sig = minhash_signatures(df, text_col, id_col, n_hashes, shingle_n)
     if cache_signatures:
         sig = sig.cache()
-    band_arr = F.array(
-        *[
-            F.concat_ws(
-                ",",
-                *[
-                    F.element_at(F.col("sig"), b * rows_per_band + r + 1).cast("string")
-                    for r in range(rows_per_band)
-                ],
-            )
-            for b in range(bands)
-        ]
-    )
-    bands_df = sig.select(
-        F.col(id_col), F.posexplode(band_arr).alias("band", "band_hash")
-    )
+    bands_df = minhash_band_keys(sig, id_col, n_hashes, bands)
     if bucket_cap is None:
         pair_src = bands_df
     else:

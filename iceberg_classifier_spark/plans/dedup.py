@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from iceberg_classifier_spark import api
+from iceberg_classifier_spark.api import MH_P, _MH_A, _MH_B
 from iceberg_classifier_spark.functions import arrays as A
 from iceberg_classifier_spark.functions import text as T
 from iceberg_classifier_spark.plans.registry import query
@@ -259,14 +261,47 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-MH_P = 4294967311  # first prime above 2^32 — universal-hash modulus
-# odd multipliers / offsets from the repo's LCG; a_i < 2^31 and base < 2^32
-# keep a_i*base + b_i < 2^63, so the whole family is exact int64 on both
-# engines
-_MH_A = [2 * ((1103515245 * (i + 1) + 12345) % 1073741823) + 1 for i in range(N_MINHASH)]
-_MH_B = [(1103515245 * (i + 101) + 12345) % 2147483648 for i in range(N_MINHASH)]
-_MH_A_SQL = "[" + ", ".join(str(a) for a in _MH_A) + "]"
-_MH_B_SQL = "[" + ", ".join(str(b) for b in _MH_B) + "]"
+# the universal-hash family lives in api.py with the Spark-side MinHash
+# code; the oracles print the first N_MINHASH members as literal lists
+_MH_A_SQL = "[" + ", ".join(str(a) for a in _MH_A[:N_MINHASH]) + "]"
+_MH_B_SQL = "[" + ", ".join(str(b) for b in _MH_B[:N_MINHASH]) + "]"
+
+
+def _bands_oracle(src: str = "documents") -> str:
+    """CTE chain computing (doc_id, band, key) LSH band keys for ``src``
+    — the DuckDB mirror of ``api.minhash_band_keys`` over
+    ``api.minhash_signatures`` (same md5-prefix base hash +
+    universal-hash family as dedup_minhash_lsh's oracle)."""
+    return f"""
+    sh AS (
+      SELECT doc_id,
+             list_distinct(list_transform(
+               generate_series(1, len(string_split(text, ' ')) - 2),
+               i -> string_split(text, ' ')[i] || ' ' ||
+                    string_split(text, ' ')[i+1] || ' ' ||
+                    string_split(text, ' ')[i+2])) AS s
+      FROM {src}
+    ), hs AS (
+      SELECT doc_id, list_transform(s, sg ->
+        list_reduce(list_prepend(CAST(0 AS BIGINT),
+          list_transform(generate_series(1, 8),
+            k -> CAST(strpos('0123456789abcdef',
+                   substr(md5(sg), CAST(k AS INTEGER), 1)) - 1 AS BIGINT))),
+          (acc, c) -> acc * 16 + c)) AS hv
+      FROM sh WHERE len(s) > 0
+    ), hashed AS (
+      SELECT doc_id, seed,
+             min((({_MH_A_SQL})[seed + 1] * h + ({_MH_B_SQL})[seed + 1])
+                 % {MH_P}) AS mh
+      FROM (SELECT doc_id, unnest(hv) AS h FROM hs),
+           (SELECT unnest(generate_series(0, {N_MINHASH - 1})) AS seed)
+      GROUP BY 1, 2
+    ), bands AS (
+      SELECT doc_id, seed // {N_MINHASH // N_BANDS} AS band,
+             string_agg(CAST(mh AS VARCHAR), ',' ORDER BY seed) AS key
+      FROM hashed GROUP BY 1, 2
+    )
+"""
 
 
 @query(
@@ -325,7 +360,9 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     {N_BANDS} bands × 4 rows; docs sharing any band bucket become
     candidates, verified with the estimated Jaccard (= fraction of equal
     minhashes). Fully value-checked — the candidate set AND the estimates
-    hash-match the oracle.
+    hash-match the oracle. The plan is ``api.minhash_dedup_pairs`` with
+    every band bucket enumerated (``bucket_cap=None``), the public
+    library's one MinHash implementation.
 
     Scale: signatures are per-row array math (no explode, no shuffle); the
     only shuffle is the equi-join on (band, band_key) whose fan-out is
@@ -334,86 +371,15 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus bytes, not bytes × seeds.
     """
     d = load_parallel(spark, sf_dir, "documents")
-    toks = d.select("doc_id", T.tokens("text").alias("toks"))
-    sh = toks.select("doc_id", T.shingles(F.col("toks"), 3).alias("sh")).where(
-        F.size("sh") > 0
+    # signatures cached: scanned by the band explode AND both sig joins
+    pairs = api.minhash_dedup_pairs(
+        d, n_hashes=N_MINHASH, bands=N_BANDS, bucket_cap=None, cache_signatures=True
     )
-    # one md5-prefix base hash per shingle, materialized in its own
-    # projection so the 32 family members reuse it instead of re-hashing
-    hs = sh.select(
-        "doc_id",
-        F.transform(
-            "sh",
-            lambda s: F.conv(F.substring(F.md5(s), 1, 8), 16, 10).cast("bigint"),
-        ).alias("hv"),
-    )
-    def family_member(i):
-        # one-arg lambda (a two-arg lambda would make F.transform pass the
-        # element index as the second parameter)
-        return lambda h: (F.lit(_MH_A[i]) * h + F.lit(_MH_B[i])) % F.lit(MH_P)
-
-    sig = hs.select(
-        "doc_id",
-        F.array(
-            *[
-                F.array_min(F.transform("hv", family_member(i)))
-                for i in range(N_MINHASH)
-            ]
-        ).alias("sig"),
-    )
-    rows_per_band = N_MINHASH // N_BANDS
-    sig = sig.cache()  # scanned by the band explode AND both sig joins
-    # band rows carry (doc_id, band, band_hash) ONLY — shuffling the
-    # 32-long signature through the 8-way band explosion would move 8
-    # copies of every signature; instead the (small) deduped candidate
-    # set joins the signatures back, one copy per doc per side
-    bands = sig.select(
-        "doc_id",
-        F.posexplode(
-            F.array(
-                *[
-                    F.concat_ws(
-                        ",",
-                        *[
-                            F.element_at(
-                                F.col("sig"), b * rows_per_band + r + 1
-                            ).cast("string")
-                            for r in range(rows_per_band)
-                        ],
-                    )
-                    for b in range(N_BANDS)
-                ]
-            )
-        ).alias("band", "band_hash"),
-    )
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-        )
-        .dropDuplicates(["doc_a", "doc_b"])
-    )
-    sa = sig.select(F.col("doc_id").alias("doc_a"), F.col("sig").alias("sig_a"))
-    sb = sig.select(F.col("doc_id").alias("doc_b"), F.col("sig").alias("sig_b"))
-    est = F.size(
-        F.filter(
-            F.zip_with("sig_a", "sig_b", lambda x, y: (x == y).cast("int")),
-            lambda eq: eq == 1,
-        )
-    ).cast("double") / F.lit(N_MINHASH)
-    return (
-        cand.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select("doc_a", "doc_b", F.round(est, 6).alias("est_jaccard"))
-        .orderBy("doc_a", "doc_b")
-    )
+    return pairs.select(
+        F.col("id_a").alias("doc_a"),
+        F.col("id_b").alias("doc_b"),
+        F.round("est_jaccard", 6).alias("est_jaccard"),
+    ).orderBy("doc_a", "doc_b")
 
 
 @query(
@@ -992,19 +958,15 @@ def minhash_lsh_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     the sketch's realized quality is oracle-checked, not just its row
     count (upgrade over the rows-only `dedup_minhash_lsh`).
 
-    Scale: signatures are one explode + (doc, seed) min-aggregation
-    (map-side combined); candidates come from the band-bucket equi-join
-    (never all pairs). The exact-truth side is inherently quadratic —
+    Scale: signatures and band keys come from ``api.minhash_signatures``
+    / ``api.minhash_band_keys`` — per-row array math, no explode of the
+    shingles and no aggregation; candidates come from the band-bucket
+    equi-join (never all pairs). The exact-truth side is inherently quadratic —
     the round-7 sampled mode caps it at sample² of the corpus (the
     uncapped audit measured 265 s at 10× data in the round-6 sweep), and
     a uniform pair sample estimates precision/recall unbiasedly.
     """
-    from iceberg_classifier_spark.functions.text import shingles, tokens
-
     docs = load(spark, sf_dir, "documents")
-    sh = docs.select(
-        "doc_id", F.explode(shingles(tokens(F.col("text")))).alias("sg")
-    )
     # exact-truth side: the canonical df-capped posting-list kernel over
     # the deterministic ~30% doc sample (sample² pair work, int64 shingle
     # hashes through the shuffle instead of raw strings)
@@ -1016,59 +978,18 @@ def minhash_lsh_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(F.col("doc_a").alias("da"), F.col("doc_b").alias("db"))
     )
-    # one md5-prefix base per shingle; the seed family is multiply-add-mod
-    # (same universal-hash construction as dedup_minhash_lsh)
-    hb = sh.select(
-        "doc_id",
-        F.conv(F.substring(F.md5("sg"), 1, 8), 16, 10).cast("bigint").alias("h0"),
-    )
-    # all K minhashes in ONE map-side-combinable aggregation — the seed
-    # dimension lives in the agg list, not in a K-fold crossJoin row
-    # blowup of the shingle frame (which re-evaluated per plan branch:
-    # measured 10 s per evaluation at sf1)
-    mins = hb.groupBy("doc_id").agg(
-        *[
-            F.min(
-                (F.lit(_MH_A[i]) * F.col("h0") + F.lit(_MH_B[i])) % F.lit(MH_P)
-            ).alias(f"m{i}")
-            for i in range(_MHQ_K)
-        ]
-    )
-    rpb = _MHQ_K // _MHQ_BANDS
-    # cached: _MHQ_BANDS rows of (doc_id, band, key) per doc — tiny, and
-    # consumed by BOTH the full candidate count and the sampled-universe
+    # cached: _MHQ_BANDS rows of (doc_id, band, band_hash) per doc — tiny,
+    # and consumed by BOTH the full candidate count and the sampled-universe
     # join (uncached each branch recomputes signatures over the corpus)
-    bands = (
-        mins.select(
-            "doc_id",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(b).cast("int").alias("band"),
-                            F.concat_ws(
-                                ",",
-                                *[
-                                    F.col(f"m{b * rpb + i}").cast("string")
-                                    for i in range(rpb)
-                                ],
-                            ).alias("key"),
-                        )
-                        for b in range(_MHQ_BANDS)
-                    ]
-                )
-            ).alias("bk"),
-        )
-        .select("doc_id", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
-        .cache()
-    )
+    sig = api.minhash_signatures(docs, n_hashes=_MHQ_K)
+    bands = api.minhash_band_keys(sig, n_hashes=_MHQ_K, bands=_MHQ_BANDS).cache()
     ba = bands.alias("ba")
     bb = bands.alias("bb")
     cand = (
         ba.join(
             bb,
             (F.col("ba.band") == F.col("bb.band"))
-            & (F.col("ba.key") == F.col("bb.key"))
+            & (F.col("ba.band_hash") == F.col("bb.band_hash"))
             & (F.col("ba.doc_id") < F.col("bb.doc_id")),
         )
         .select(

@@ -16,8 +16,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from iceberg_classifier_spark import api
+from iceberg_classifier_spark.plans.dedup import N_BANDS, N_MINHASH, _bands_oracle
 from iceberg_classifier_spark.plans.registry import query
-from iceberg_classifier_spark.plans.streaming_q2 import _band_keys, _bands_oracle
 from iceberg_classifier_spark.sources.tables import load
 
 _HOT = 100  # bucket-size threshold for the hot-bucket report
@@ -84,7 +85,11 @@ def dedup_minhash_skewed(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cached: the band keys feed the bucket-min agg, the join-back and
     # the hot-bucket stats — uncached each branch re-runs the md5 +
     # 32-hash signature work over the corpus
-    keys = _band_keys(docs_sk).cache()
+    keys = api.minhash_band_keys(
+        api.minhash_signatures(docs_sk, n_hashes=N_MINHASH),
+        n_hashes=N_MINHASH,
+        bands=N_BANDS,
+    ).cache()
     # bucket representative via associative window min (map-side combinable
     # in the grouped rewrite below — NEVER a bucket self-join)
     bmin = keys.groupBy("band", "band_hash").agg(

@@ -17,73 +17,11 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from iceberg_classifier_spark.functions import text as T
-from iceberg_classifier_spark.plans.dedup import (
-    MH_P,
-    N_BANDS,
-    N_MINHASH,
-    _MH_A,
-    _MH_A_SQL,
-    _MH_B,
-    _MH_B_SQL,
-)
+from iceberg_classifier_spark import api
+from iceberg_classifier_spark.plans.dedup import N_BANDS, N_MINHASH, _bands_oracle
 from iceberg_classifier_spark.plans.registry import query
 from iceberg_classifier_spark.sources.tables import table_path
 from iceberg_classifier_spark.streaming.events import streaming_shuffle
-
-_ROWS_PER_BAND = N_MINHASH // N_BANDS
-
-
-def _band_keys(d: DataFrame) -> DataFrame:
-    """(doc_id, band, band_hash) LSH keys — the same Broder construction
-    as dedup_minhash_lsh (one md5-prefix base hash per 3-shingle, the
-    shared (a_i, b_i) universal-hash family, {N_BANDS} bands ×
-    {_ROWS_PER_BAND} rows), emitted as band keys only: per-row array
-    math, no shuffle."""
-    sh = d.select(
-        "doc_id", T.shingles(T.tokens("text"), 3).alias("sh")
-    ).where(F.size("sh") > 0)
-    hs = sh.select(
-        "doc_id",
-        F.transform(
-            "sh",
-            lambda s: F.conv(F.substring(F.md5(s), 1, 8), 16, 10).cast(
-                "bigint"
-            ),
-        ).alias("hv"),
-    )
-
-    def family_member(i):
-        return lambda h: (F.lit(_MH_A[i]) * h + F.lit(_MH_B[i])) % F.lit(MH_P)
-
-    sig = hs.select(
-        "doc_id",
-        F.array(
-            *[
-                F.array_min(F.transform("hv", family_member(i)))
-                for i in range(N_MINHASH)
-            ]
-        ).alias("sig"),
-    )
-    return sig.select(
-        "doc_id",
-        F.posexplode(
-            F.array(
-                *[
-                    F.concat_ws(
-                        ",",
-                        *[
-                            F.element_at(
-                                F.col("sig"), b * _ROWS_PER_BAND + r + 1
-                            ).cast("string")
-                            for r in range(_ROWS_PER_BAND)
-                        ],
-                    )
-                    for b in range(N_BANDS)
-                ]
-            )
-        ).alias("band", "band_hash"),
-    )
 
 
 def _doc_thirds_stream(spark: SparkSession, sf_dir: str):
@@ -127,42 +65,6 @@ def _doc_thirds_stream(spark: SparkSession, sf_dir: str):
         .option("maxFilesPerTrigger", "1")
         .parquet(stage)
     )
-
-
-def _bands_oracle(src: str = "documents") -> str:
-    """CTE chain computing (doc_id, band, key) LSH band keys for ``src``
-    — the DuckDB mirror of ``_band_keys`` (same md5-prefix base hash +
-    universal-hash family as dedup_minhash_lsh's oracle)."""
-    return f"""
-    sh AS (
-      SELECT doc_id,
-             list_distinct(list_transform(
-               generate_series(1, len(string_split(text, ' ')) - 2),
-               i -> string_split(text, ' ')[i] || ' ' ||
-                    string_split(text, ' ')[i+1] || ' ' ||
-                    string_split(text, ' ')[i+2])) AS s
-      FROM {src}
-    ), hs AS (
-      SELECT doc_id, list_transform(s, sg ->
-        list_reduce(list_prepend(CAST(0 AS BIGINT),
-          list_transform(generate_series(1, 8),
-            k -> CAST(strpos('0123456789abcdef',
-                   substr(md5(sg), CAST(k AS INTEGER), 1)) - 1 AS BIGINT))),
-          (acc, c) -> acc * 16 + c)) AS hv
-      FROM sh WHERE len(s) > 0
-    ), hashed AS (
-      SELECT doc_id, seed,
-             min((({_MH_A_SQL})[seed + 1] * h + ({_MH_B_SQL})[seed + 1])
-                 % {MH_P}) AS mh
-      FROM (SELECT doc_id, unnest(hv) AS h FROM hs),
-           (SELECT unnest(generate_series(0, {N_MINHASH - 1})) AS seed)
-      GROUP BY 1, 2
-    ), bands AS (
-      SELECT doc_id, seed // {_ROWS_PER_BAND} AS band,
-             string_agg(CAST(mh AS VARCHAR), ',' ORDER BY seed) AS key
-      FROM hashed GROUP BY 1, 2
-    )
-"""
 
 
 _BANDS_ORACLE = _bands_oracle("documents")
@@ -227,7 +129,8 @@ def streaming_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB/day this is the only corpus-dedup shape that avoids re-signing
     the historical corpus (production: store as a bucketed table on the
     band key so the daily join is shuffle-free on the store side;
-    signature math is identical to dedup_minhash_lsh, cited there).
+    signatures and band keys are ``api.minhash_signatures`` /
+    ``api.minhash_band_keys``, the code dedup_minhash_lsh runs).
     """
     stream = _doc_thirds_stream(spark, sf_dir)
     run = uuid.uuid4().hex[:8]
@@ -237,7 +140,11 @@ def streaming_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
         sess = batch_df.sparkSession
-        keys = _band_keys(batch_df).cache()
+        keys = api.minhash_band_keys(
+            api.minhash_signatures(batch_df, n_hashes=N_MINHASH),
+            n_hashes=N_MINHASH,
+            bands=N_BANDS,
+        ).cache()
         n_docs = batch_df.count()
         # vs-store rejections: any band key already present in the store
         if store_versions:

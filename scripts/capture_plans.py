@@ -1,14 +1,23 @@
 #!/usr/bin/env python3
 """Capture .explain("formatted") for headline (or named) queries into
-plans/$SPARK_GRAFT_PLANS_ROUND/ (default r10).
+plans/$SPARK_GRAFT_PLANS_ROUND/ (default r10), and print a sha256 digest
+of each plan's skeleton: the operator tree (the formatted explain up to its
+first blank line) with expression IDs (#123) and bracketed attribute lists
+removed, so a rename or fresh expression IDs do not hide whether the plan
+changed.
 
 Usage: python scripts/capture_plans.py before|after [name ...]
 """
-import os, sys
+import hashlib, os, re, sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 USAGE = "Usage: python scripts/capture_plans.py before|after [name ...]"
+
+def skeleton_digest(plan: str) -> str:
+    tree = plan.split("\n\n", 1)[0]
+    tree = re.sub(r"\[[^\]]*\]", "", re.sub(r"#\d+", "", tree))
+    return hashlib.sha256(tree.encode()).hexdigest()
 
 def main():
     if len(sys.argv) < 2 or sys.argv[1] not in ("before", "after"):
@@ -33,7 +42,7 @@ def main():
         with open(os.path.join(out_dir, f"{name}_{tag}.txt"), "w") as f:
             f.write(plan)
         spark.catalog.clearCache()
-        print(f"captured {name}_{tag}: {plan.count('Exchange')} Exchange-mentions, {len(plan)} chars")
+        print(f"captured {name}_{tag}: {plan.count('Exchange')} Exchange-mentions, {len(plan)} chars, skeleton sha256 {skeleton_digest(plan)}")
     spark.stop()
 
 if __name__ == "__main__":

@@ -156,6 +156,35 @@ def test_ann_topk_matches_registered_plan(spark, sf_dir):
     assert got.equals(exp)
 
 
+def test_minhash_pairs_match_registered_plan(spark, sf_dir):
+    from iceberg_classifier_spark.plans.registry import load_all_queries
+    from iceberg_classifier_spark.sources.tables import load
+
+    docs = load(spark, sf_dir, "documents")
+    got = (
+        api.minhash_dedup_pairs(docs, bucket_cap=None)
+        .select(
+            F.col("id_a").alias("doc_a"),
+            F.col("id_b").alias("doc_b"),
+            F.round("est_jaccard", 6).alias("est_jaccard"),
+        )
+        .toPandas()
+        .sort_values(["doc_a", "doc_b"], ignore_index=True)
+    )
+    reg = load_all_queries()
+    exp = (
+        reg["dedup_minhash_lsh"].fn(spark, sf_dir)
+        .select("doc_a", "doc_b", "est_jaccard")
+        .toPandas()
+        .sort_values(["doc_a", "doc_b"], ignore_index=True)
+    )
+    spark.catalog.clearCache()
+    # same candidate pairs AND the same estimates: the library's default
+    # signatures and bands are the registered plan's, bit for bit
+    assert len(exp) > 0
+    assert got.equals(exp)
+
+
 def test_folds_metrics_reexports(spark):
     df = spark.range(100).select(
         F.col("id"), (F.col("id") % 2).cast("double").alias("y")
@@ -260,7 +289,7 @@ def test_minhash_pairs_hot_bucket_star_threshold_caveat(spark):
     (candidate at threshold 0) and estimates 0.71875 — above 0, below
     the 0.8 filter."""
     template = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    variant = "alpha beta xi delta epsilon zeta eta theta iota kappa"
+    variant = "alpha chi gamma delta epsilon zeta eta theta iota kappa"
     rows = [(0, variant)] + [(i, template) for i in range(1, 40)]
     df = spark.createDataFrame(rows, "url long, body string")
     # threshold 0: the variant is rep (min id) of every bucket it shares

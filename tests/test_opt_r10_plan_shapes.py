@@ -17,6 +17,9 @@ bench regression:
   frame (dedup-window output / per-doc metadata) must stay cached —
   consumers read an InMemoryTableScan instead of re-running the
   data-sized shuffle / re-tokenizing the corpus.
+- dedup_minhash_lsh / dedup_minhash_skewed / minhash_lsh_quality: the
+  MinHash signature or band-key frame that several branches read must
+  stay cached, so the md5 + hash-family work runs once per document.
 """
 
 from __future__ import annotations
@@ -89,7 +92,14 @@ def test_colbert_has_no_posting_distinct_shuffle(spark, sf_dir):
 
 
 @pytest.mark.parametrize(
-    "name", ["curated_corpus_pipeline", "token_budget_selection"]
+    "name",
+    [
+        "curated_corpus_pipeline",
+        "token_budget_selection",
+        "dedup_minhash_lsh",
+        "dedup_minhash_skewed",
+        "minhash_lsh_quality",
+    ],
 )
 def test_reused_minority_frames_stay_cached(name, spark, sf_dir):
     plan = _executed_plan(spark, name, sf_dir)
