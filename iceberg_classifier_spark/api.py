@@ -16,7 +16,8 @@ families here are parameterized versions of their registered twins.
 Scale notes: signatures are per-row array math (no shuffle), candidate
 generation shuffles only (id, band, band_hash) triples, decontamination
 broadcasts only a genuinely small eval side, and budget selection uses the
-two-level distributed prefix sum instead of a global sort.
+two-level distributed prefix sum (``operators.prefix.running_sums``)
+instead of a global sort.
 
 >>> from iceberg_classifier_spark import api
 >>> pairs = api.minhash_dedup_pairs(corpus, text_col="body", id_col="url")
@@ -41,6 +42,7 @@ from iceberg_classifier_spark.operators.metrics import (  # noqa: F401 — re-ex
     log_loss,
     log_loss_expr,
 )
+from iceberg_classifier_spark.operators.prefix import running_sums
 from iceberg_classifier_spark.operators.stacking import (  # noqa: F401
     stack,
     stack_stats,
@@ -354,29 +356,15 @@ def token_budget_select(
     id_col: str = "doc_id",
 ) -> DataFrame:
     """Greedy selection by descending quality until the running token sum
-    reaches ``budget_tokens`` — via the two-level distributed prefix sum
-    (bucket offsets broadcast + within-bucket partitioned cumsum), so no
-    corpus-wide single-partition sort exists in the plan."""
-    cb = df.withColumn("_qb", F.expr(f"{quality_col} div 4096"))
-    bkt = cb.groupBy("_qb").agg(F.sum(n_tokens_col).alias("_bn"))
-    off = bkt.select(
-        "_qb",
-        (
-            F.sum("_bn").over(Window.partitionBy().orderBy(F.desc("_qb")))
-            - F.col("_bn")
-        ).alias("_off"),
+    reaches ``budget_tokens``. The running sum is
+    ``operators.prefix.running_sums`` over negated quality buckets, so no
+    corpus-wide single-partition sort exists in the plan. ``quality_col``
+    may be integer or floating point."""
+    cb = df.withColumn("_qb", -F.floor(F.col(quality_col) / 4096))
+    cum, _ = running_sums(
+        cb, "_qb", [F.desc(quality_col), id_col], {"_s": n_tokens_col}
     )
-    wl = (
-        Window.partitionBy("_qb")
-        .orderBy(F.desc(quality_col), id_col)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return (
-        cb.join(F.broadcast(off), "_qb")
-        .withColumn("_s", F.col("_off") + F.sum(n_tokens_col).over(wl))
-        .where(F.col("_s") <= F.lit(budget_tokens))
-        .drop("_qb", "_off", "_s")
-    )
+    return cum.where(F.col("_s") <= F.lit(budget_tokens)).drop("_qb", "_s")
 
 
 def curation_funnel(

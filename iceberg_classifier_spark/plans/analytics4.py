@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from iceberg_classifier_spark.operators.prefix import running_sums
 from iceberg_classifier_spark.plans.registry import query
 from iceberg_classifier_spark.sources.tables import load
 
@@ -60,10 +61,9 @@ def ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     enters until the final display division.
 
     Scale: one shuffle groups duplicates by value (map-side combinable);
-    the ECDF prefix-sum is then two-level — per-range-bucket subtotals
-    (dimension-sized window) plus a within-bucket cumulative window
-    partitioned by bucket — the distributed prefix-sum shape, never a
-    single-partition global sort over all distinct values.
+    the ECDF prefix-sum is then ``operators.prefix.running_sums`` over
+    cents-range buckets, never a single-partition global sort over all
+    distinct values.
     """
     o = load(spark, sf_dir, "orders")
     cust = load(spark, sf_dir, "customer").where(
@@ -80,24 +80,7 @@ def ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum("b1").alias("c1"), F.sum("b2").alias("c2"))
         .withColumn("bkt", F.expr("cents div 1000000"))
     )
-    # two-level distributed prefix sum: bucket offsets + local cumsum
-    bkt = g.groupBy("bkt").agg(F.sum("c1").alias("s1"), F.sum("c2").alias("s2"))
-    wb = Window.partitionBy().orderBy("bkt")
-    off = bkt.select(
-        "bkt",
-        (F.sum("s1").over(wb) - F.col("s1")).alias("off1"),
-        (F.sum("s2").over(wb) - F.col("s2")).alias("off2"),
-    )
-    wl = (
-        Window.partitionBy("bkt")
-        .orderBy("cents")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    c = g.join(F.broadcast(off), "bkt").select(
-        "cents",
-        (F.col("off1") + F.sum("c1").over(wl)).alias("cum1"),
-        (F.col("off2") + F.sum("c2").over(wl)).alias("cum2"),
-    )
+    c, _ = running_sums(g, "bkt", ["cents"], {"cum1": "c1", "cum2": "c2"})
     # NOTE(r10 opt): deriving t from bkt's subtotals was tried and A/B-
     # measured 1.21× SLOWER — AQE stage reuse already runs g's exchange
     # once across all three consumers, so the direct agg costs nothing
@@ -1007,11 +990,9 @@ def mann_whitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
     z-score is float, as one identical IEEE expression.
 
     Scale: one broadcast join + one map-combinable value groupBy; the
-    midrank cumulative count IS the ks_two_sample two-level prefix sum —
-    per-range-bucket subtotals give broadcast offsets (dimension window
-    over buckets) and the within-bucket window is PARTITIONED by bucket —
-    never a per-row rank, never a single-partition pass over the
-    distinct-value frame.
+    midrank cumulative count is ``operators.prefix.running_sums`` over
+    cents-range buckets, as in ks_two_sample — never a per-row rank,
+    never a single-partition pass over the distinct-value frame.
     """
     o = load(spark, sf_dir, "orders")
     cust = load(spark, sf_dir, "customer").where(
@@ -1029,22 +1010,10 @@ def mann_whitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("t", F.col("c1") + F.col("c2"))
         .withColumn("bkt", F.expr("cents div 1000000"))
     )
-    # two-level distributed prefix sum over the distinct-value frame
-    bkt = g.groupBy("bkt").agg(F.sum("t").alias("bt"))
-    off = bkt.select(
-        "bkt",
-        (
-            F.sum("bt").over(Window.partitionBy().orderBy("bkt")) - F.col("bt")
-        ).alias("off"),
-    )
-    wl = (
-        Window.partitionBy("bkt")
-        .orderBy("cents")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    c = g.join(F.broadcast(off), "bkt").withColumn(
-        "cb", F.col("off") + F.coalesce(F.sum("t").over(wl), F.lit(0))
-    )
+    cum, _ = running_sums(g, "bkt", ["cents"], {"cum": "t"})
+    # count of all values strictly below this one: the inclusive running
+    # count minus this value's own tie group
+    c = cum.withColumn("cb", F.col("cum") - F.col("t"))
     s = c.agg(
         F.sum("c1").cast("bigint").alias("n1"),
         F.sum("c2").cast("bigint").alias("n2"),

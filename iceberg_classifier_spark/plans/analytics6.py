@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from iceberg_classifier_spark.operators.prefix import running_sums
 from iceberg_classifier_spark.plans.registry import query
 from iceberg_classifier_spark.sources.tables import load
 
@@ -253,11 +254,10 @@ def sprt_sequential_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     (±ln 19 for alpha=beta=0.05) — the early-stopping machinery of
     sequential A/B testing, on a batch stream.
 
-    Scale: the running counts (n, k) are a two-level distributed prefix
-    sum — per-day bucket totals (dimension-sized window) plus
-    bucket-partitioned local running counts — never a single-partition
-    window over the event stream; the first crossing is a bounded
-    TakeOrdered.
+    Scale: the running counts (n, k) are
+    ``operators.prefix.running_sums`` over day buckets — never a
+    single-partition window over the event stream; the first crossing is
+    a bounded TakeOrdered.
     """
     e = load(spark, sf_dir, "events").select(
         "ts",
@@ -265,29 +265,10 @@ def sprt_sequential_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.to_date("ts").alias("bkt"),
         (F.col("event_type") == "purchase").cast("bigint").alias("hit"),
     )
-    # two-level distributed walk: day buckets are monotone in (ts,
-    # event_id), so bucket-prefix totals + bucket-local running counts
-    # compose the global (n, k) without a single-partition window
-    bkt = e.groupBy("bkt").agg(
-        F.count(F.lit(1)).alias("cnt"), F.sum("hit").alias("hits")
-    )
-    wb = Window.partitionBy().orderBy("bkt").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    off = bkt.select(
-        "bkt",
-        F.coalesce(F.sum("cnt").over(wb), F.lit(0)).alias("pn"),
-        F.coalesce(F.sum("hits").over(wb), F.lit(0)).alias("pk"),
-    )
-    wl = Window.partitionBy("bkt").orderBy("ts", "event_id")
-    walk = e.join(F.broadcast(off), "bkt").select(
-        (F.col("pn") + F.row_number().over(wl)).alias("n"),
-        (
-            F.col("pk")
-            + F.sum("hit").over(
-                wl.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-            )
-        ).alias("k"),
+    # n is a running count: over a ROWS frame, the running sum of a
+    # constant 1 is row_number
+    walk, _ = running_sums(
+        e, "bkt", ["ts", "event_id"], {"n": F.lit(1), "k": "hit"}
     )
     import math
 

@@ -7,6 +7,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from iceberg_classifier_spark.operators.prefix import running_sums
 from iceberg_classifier_spark.plans.registry import query
 from iceberg_classifier_spark.sources.tables import load
 
@@ -154,10 +155,9 @@ def temporal_split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     weighs between temporal and grouped splits.
 
     Scale: one distinct-timestamp rollup; the cumulative count over it is
-    the two-level distributed prefix sum — per-day bucket subtotals give
-    broadcast offsets and the within-bucket window is PARTITIONED by day
-    bucket, so no single-partition pass over the distinct-timestamp frame
-    at any cardinality. The user-overlap is a distinct-key semi-join —
+    ``operators.prefix.running_sums`` over day buckets, so no
+    single-partition pass over the distinct-timestamp frame at any
+    cardinality. The user-overlap is a distinct-key semi-join —
     all shuffle keys are user ids or timestamps, map-side combined.
     """
     e = load(spark, sf_dir, "events").select(
@@ -167,26 +167,9 @@ def temporal_split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     g = e.groupBy("t").agg(F.count(F.lit(1)).alias("c")).withColumn(
         "bkt", F.expr("t div 86400000000")  # one day in microseconds
     )
-    off = (
-        g.groupBy("bkt")
-        .agg(F.sum("c").alias("bc"))
-        .select(
-            "bkt",
-            (
-                F.sum("bc").over(Window.partitionBy().orderBy("bkt"))
-                - F.col("bc")
-            ).alias("off"),
-        )
-    )
-    wl = (
-        Window.partitionBy("bkt")
-        .orderBy("t")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
+    cum, _ = running_sums(g, "bkt", ["t"], {"cum": "c"})
     bound = (
-        g.join(F.broadcast(off), "bkt")
-        .withColumn("cum", F.col("off") + F.sum("c").over(wl))
-        .crossJoin(F.broadcast(n_row))
+        cum.crossJoin(F.broadcast(n_row))
         .where(F.col("cum") >= F.expr("(4 * n + 4) div 5"))
         .agg(F.min("t").cast("bigint").alias("t80"))
     )

@@ -8,6 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from iceberg_classifier_spark.operators.prefix import running_sums
 from iceberg_classifier_spark.plans.registry import query
 from iceberg_classifier_spark.sources.tables import load
 
@@ -53,11 +54,9 @@ def token_budget_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     data-mixing run is planned from.
 
     Scale: the greedy prefix needs a corpus-wide cumulative token sum in
-    (quality DESC, doc_id) order — computed as the two-level distributed
-    prefix sum: per-quality-bucket token subtotals give broadcast offsets
-    (one window over ≤245 bucket rows), and the within-bucket cumsum
-    window is PARTITIONED by bucket. No single-partition sort of the
-    corpus; the per-doc scoring is one shuffle-free scan.
+    (quality DESC, doc_id) order — ``operators.prefix.running_sums`` over
+    ≤245 quality buckets, so no single-partition sort of the corpus; the
+    per-doc scoring is one shuffle-free scan.
     """
     toks = F.split(F.trim("text"), " ")
     t = (
@@ -75,8 +74,9 @@ def token_budget_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n",
             F.expr("(u * 1000000) div n").alias("q"),
         )
-        # quality buckets for the two-level prefix sum: q is in [0, 1e6]
-        .withColumn("qb", F.expr("q div 4096"))
+        # negated quality buckets for the two-level prefix sum: q is in
+        # [0, 1e6], so -(q div 4096) never decreases in (q DESC, doc_id)
+        .withColumn("qb", F.expr("-(q div 4096)"))
         # cached: t is the per-doc METADATA frame (doc_id, lang, n, q, qb —
         # no text), consumed by the bucket agg AND the cumsum join; without
         # the cache each consumer re-tokenizes the corpus (split +
@@ -85,31 +85,10 @@ def token_budget_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
         # (guide §5): ~40 B/doc vs the corpus text bytes
         .cache()
     )
-    # bucket offsets: cumulative token mass of all STRICTLY higher-quality
-    # buckets (window over the ≤245-row bucket dimension only)
-    bkt = t.groupBy("qb").agg(F.sum("n").alias("bn"))
+    cum, bkt = running_sums(t, "qb", [F.desc("q"), "doc_id"], {"s": "n"})
     # the budget is the grand total of the bucket subtotals — derived from
     # bkt (exact int64 sums are associative) instead of a third scan of t
-    budget = bkt.agg(F.expr("sum(bn) div 4").cast("bigint").alias("budget"))
-    off = bkt.select(
-        "qb",
-        (
-            F.sum("bn").over(Window.partitionBy().orderBy(F.desc("qb")))
-            - F.col("bn")
-        ).alias("off"),
-    )
-    wl = (
-        Window.partitionBy("qb")
-        .orderBy(F.desc("q"), "doc_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    cum = t.join(F.broadcast(off), "qb").select(
-        "doc_id",
-        "lang",
-        "n",
-        "q",
-        (F.col("off") + F.sum("n").over(wl)).alias("s"),
-    )
+    budget = bkt.agg(F.expr("sum(s) div 4").cast("bigint").alias("budget"))
     sel = cum.crossJoin(F.broadcast(budget)).filter(F.col("s") <= F.col("budget"))
     return (
         sel.groupBy("lang")

@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from iceberg_classifier_spark.operators.prefix import running_sums
 from iceberg_classifier_spark.plans.registry import query
 from iceberg_classifier_spark.sources.tables import load
 
@@ -118,9 +119,9 @@ def curated_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
        (both sides explode to grams; the join keys are high-cardinality
        and evenly distributed, so the shuffle is well-behaved)
     5. token-budget selection — greedy by quality until ``Σn div 4`` of
-       the clean token mass, via the repo's two-level distributed prefix
-       sum (bucket offsets broadcast + within-bucket partitioned cumsum —
-       no corpus-wide single-partition sort)
+       the clean token mass, via the two-level distributed prefix sum
+       ``operators.prefix.running_sums`` — no corpus-wide
+       single-partition sort)
 
     Emits the per-stage observability counters (docs, tokens) the
     `observe_pipeline_metrics` pattern tracks, plus the selected set's
@@ -194,33 +195,17 @@ def curated_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     clean = dkept.join(contaminated, "doc_id", "left_anti").cache()
-    # two-level distributed prefix sum in (q DESC, doc_id) order
-    cb = clean.withColumn("qb", F.expr("q div 4096"))
-    bkt = cb.groupBy("qb").agg(F.sum("n").alias("bn"))
+    # negated quality buckets: -(q div 4096) never decreases in
+    # (q DESC, doc_id), the order of the greedy selection
+    cb = clean.withColumn("qb", F.expr("-(q div 4096)"))
+    cum, bkt = running_sums(cb, "qb", [F.desc("q"), "doc_id"], {"s": "n"})
     # the token budget is the grand total of the bucket subtotals —
     # derived from bkt instead of a separate clean-wide agg job (exact
-    # int64 sums are associative, so Σ bn ≡ Σ n)
+    # int64 sums are associative, so Σ bkt.s ≡ Σ n)
     budget = bkt.agg(
-        F.expr(f"sum(bn) div {_BUDGET_DIV}").cast("bigint").alias("budget")
+        F.expr(f"sum(s) div {_BUDGET_DIV}").cast("bigint").alias("budget")
     )
-    off = bkt.select(
-        "qb",
-        (
-            F.sum("bn").over(Window.partitionBy().orderBy(F.desc("qb")))
-            - F.col("bn")
-        ).alias("off"),
-    )
-    wl = (
-        Window.partitionBy("qb")
-        .orderBy(F.desc("q"), "doc_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    sel = (
-        cb.join(F.broadcast(off), "qb")
-        .withColumn("s", F.col("off") + F.sum("n").over(wl))
-        .crossJoin(F.broadcast(budget))
-        .where(F.col("s") <= F.col("budget"))
-    )
+    sel = cum.crossJoin(F.broadcast(budget)).where(F.col("s") <= F.col("budget"))
 
     def stage(ord_: int, name: str, df: DataFrame) -> DataFrame:
         return df.agg(

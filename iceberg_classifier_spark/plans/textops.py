@@ -10,6 +10,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from iceberg_classifier_spark.functions import text as T
+from iceberg_classifier_spark.operators.prefix import running_sums
 from iceberg_classifier_spark.plans.registry import query
 from iceberg_classifier_spark.sources.tables import load
 
@@ -622,36 +623,17 @@ def concat_chunk_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     padding in this scheme — the reason pretraining uses it over padded
     per-doc batches).
 
-    Scale: one scan for token counts; the cumulative sum is the two-level
-    distributed prefix sum (ks_two_sample's shape) — per-doc_id-range
-    bucket subtotals give broadcast offsets (dimension-sized window over
-    bucket count, not rows), then the within-bucket cumsum window is
-    PARTITIONED by bucket. No corpus-wide single-partition window. The
-    actual sequence materialization would be a map-side substring pass
-    using these exact offsets.
+    Scale: one scan for token counts; the cumulative sum is
+    ``operators.prefix.running_sums`` over doc_id-range buckets, so no
+    corpus-wide single-partition window. The actual sequence
+    materialization would be a map-side substring pass using these exact
+    offsets.
     """
     toks = load(spark, sf_dir, "documents").select(
         "doc_id", F.size(T.tokens(F.col("text"))).alias("n")
     ).withColumn("bkt", F.expr("doc_id div 4096"))
-    # two-level distributed prefix sum: bucket offsets + local cumsum
-    bkt = toks.groupBy("bkt").agg(F.sum("n").alias("sn"))
-    off = bkt.select(
-        "bkt",
-        (
-            F.sum("sn").over(Window.partitionBy().orderBy("bkt")) - F.col("sn")
-        ).alias("off"),
-    )
-    wl = (
-        Window.partitionBy("bkt")
-        .orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    cum = (
-        toks.join(F.broadcast(off), "bkt")
-        .select("doc_id", "n", (F.col("off") + F.sum("n").over(wl)).alias("s"))
-        .filter(F.col("n") > 0)
-    )
-    spans = cum.select(
+    cum, _ = running_sums(toks, "bkt", ["doc_id"], {"s": "n"})
+    spans = cum.filter(F.col("n") > 0).select(
         "n",
         F.expr(f"(s - n) div {_PACK_CAP}").alias("c_start"),
         F.expr(f"(s - 1) div {_PACK_CAP}").alias("c_end"),

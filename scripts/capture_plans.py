@@ -4,7 +4,8 @@ plans/$SPARK_GRAFT_PLANS_ROUND/ (default r10), and print a sha256 digest
 of each plan's skeleton: the operator tree (the formatted explain up to its
 first blank line) with expression IDs (#123) and bracketed attribute lists
 removed, so a rename or fresh expression IDs do not hide whether the plan
-changed.
+changed. An existing capture file is never overwritten: the script exits
+non-zero naming it, before any plan is built.
 
 Usage: python scripts/capture_plans.py before|after [name ...]
 """
@@ -30,16 +31,22 @@ def main():
     os.environ.setdefault("SPARK_GRAFT_QUIET_LOGS", "1")
     from iceberg_classifier_spark.plans.registry import load_all_queries
     from iceberg_classifier_spark.session import get_spark
-    spark = get_spark("capture_plans")
     reg = load_all_queries()
     todo = names or sorted(n for n, qd in reg.items() if qd.headline)
     rnd = os.environ.get("SPARK_GRAFT_PLANS_ROUND", "r10")
     out_dir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", rnd)
+    paths = {name: os.path.join(out_dir, f"{name}_{tag}.txt") for name in todo}
+    # a capture is committed evidence: never overwrite one
+    taken = [p for p in paths.values() if os.path.exists(p)]
+    if taken:
+        print("capture_plans: refusing to overwrite " + ", ".join(taken), file=sys.stderr)
+        sys.exit(1)
     os.makedirs(out_dir, exist_ok=True)
+    spark = get_spark("capture_plans")
     for name in todo:
         df = reg[name].fn(spark, sf_dir)
         plan = df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
-        with open(os.path.join(out_dir, f"{name}_{tag}.txt"), "w") as f:
+        with open(paths[name], "w") as f:
             f.write(plan)
         spark.catalog.clearCache()
         print(f"captured {name}_{tag}: {plan.count('Exchange')} Exchange-mentions, {len(plan)} chars, skeleton sha256 {skeleton_digest(plan)}")

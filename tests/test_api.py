@@ -80,6 +80,54 @@ def test_quality_filter_and_budget(spark):
     assert 0 < sel.n_tokens.sum() <= 30
 
 
+def test_token_budget_select_accepts_double_quality(spark):
+    # a 0-1 model score as the quality column: the bucket expression must
+    # type-check for doubles (integer div does not)
+    docs = spark.createDataFrame(
+        [(1, 0.9, 5), (2, 0.7, 5), (3, 0.5, 5)],
+        "doc_id long, quality double, n_tokens int",
+    )
+    sel = api.token_budget_select(docs, budget_tokens=10)
+    assert sorted(r.doc_id for r in sel.collect()) == [1, 2]
+
+
+def test_token_budget_matches_registered_plan(spark, sf_dir):
+    from iceberg_classifier_spark.plans.registry import load_all_queries
+    from iceberg_classifier_spark.sources.tables import load
+
+    # the per-doc (doc_id, lang, n, q) frame token_budget_selection builds
+    toks = F.split(F.trim("text"), " ")
+    docs = (
+        load(spark, sf_dir, "documents")
+        .select("doc_id", "lang", F.size(toks).alias("n"),
+                F.size(F.array_distinct(toks)).alias("u"))
+        .filter(F.col("n") > 0)
+        .select("doc_id", "lang", "n", F.expr("(u * 1000000) div n").alias("q"))
+    )
+    budget = docs.agg(F.expr("sum(n) div 4")).first()[0]
+    got = (
+        api.token_budget_select(docs, budget, quality_col="q", n_tokens_col="n")
+        .groupBy("lang")
+        .agg(
+            F.count(F.lit(1)).alias("n_docs_sel"),
+            F.sum("n").alias("tokens_sel"),
+            F.min("q").alias("min_quality_sel"),
+        )
+        .toPandas()
+        .sort_values("lang", ignore_index=True)
+    )
+    reg = load_all_queries()
+    exp = (
+        reg["token_budget_selection"].fn(spark, sf_dir)
+        .select("lang", "n_docs_sel", "tokens_sel", "min_quality_sel")
+        .toPandas()
+        .sort_values("lang", ignore_index=True)
+    )
+    spark.catalog.clearCache()
+    assert len(exp) > 0
+    assert got.equals(exp)
+
+
 def test_curation_funnel_composes(spark, corpus):
     eval_df = spark.createDataFrame(
         [("the quick brown fox jumps over the lazy dog",)], "body string"

@@ -504,6 +504,48 @@ def test_distributed_ntile_matches_exact_semantics(spark):
         assert got == expected, f"n={n} nb={nb}: {got} != {expected}"
 
 
+def test_running_sums_match_single_partition_window(spark):
+    """operators.prefix.running_sums (bucket offsets + bucket-partitioned
+    running window) must equal the single-partition running window in the
+    same order, with its subtotals equal to a groupBy sum, and must plan
+    exactly one unpartitioned Window: the one over the bucket dimension."""
+    from pyspark.sql import Window
+
+    from iceberg_classifier_spark.operators.prefix import running_sums
+
+    # descending v through the negated bucket -(v div 10); v = 21 is a
+    # one-row bucket, v = 33 a tie broken by id
+    rows = [(1, 35, 2, 10), (2, 33, 1, 20), (3, 33, 4, 30), (4, 21, 3, 40),
+            (5, 7, 5, 50), (6, 5, 1, 60), (7, 1, 2, 70)]
+    df = spark.createDataFrame(rows, "id long, v long, a long, b long")
+    df = df.withColumn("bkt", -F.expr("v div 10"))
+    order = [F.desc("v"), "id"]
+    sums = {"ra": "a", "rb": "b"}
+    got, sub = running_sums(df, "bkt", order, sums)
+    assert got.columns == df.columns + ["ra", "rb"]
+    whole = Window.orderBy(*order).rowsBetween(
+        Window.unboundedPreceding, Window.currentRow
+    )
+    exp = df.select(
+        "id", *(F.sum(c).over(whole).alias(o) for o, c in sums.items())
+    )
+    assert sorted(got.select("id", "ra", "rb").collect()) == sorted(exp.collect())
+    ref = df.groupBy("bkt").agg(F.sum("a").alias("ra"), F.sum("b").alias("rb"))
+    assert sorted(sub.collect()) == sorted(ref.collect())
+
+    stack, unpartitioned = [got._jdf.queryExecution().optimizedPlan()], 0
+    while stack:
+        node = stack.pop()
+        if node.nodeName() == "Window" and node.partitionSpec().isEmpty():
+            unpartitioned += 1
+        ch = node.children()
+        stack.extend(ch.apply(i) for i in range(ch.size()))
+    assert unpartitioned == 1
+
+    empty, empty_sub = running_sums(df.limit(0), "bkt", order, sums)
+    assert empty.collect() == [] and empty_sub.collect() == []
+
+
 def test_ahash_kernel_matches_catalyst_expression(spark):
     """The Arrow numpy aHash kernel (_ahash_frame) must be bit-identical
     to the Catalyst HOF spelling it replaced (_ahash_cols) — the oracle
