@@ -2,7 +2,9 @@
 """Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints one
 JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec}, "sf": ...}.
+"queries": {name: sec}, "sf": ..., "sf_dir": ..., "cpus": ...,
+"spark_version": ...}, where ``cpus`` is the session's resolved default
+parallelism.
 
 Each query executes its full plan via the noop sink (no driver
 materialization, no result-size bias).
@@ -81,7 +83,8 @@ def main() -> None:
     headline = {n: qd for n, qd in registry.items() if qd.headline}
 
     # one warmup pass to exclude JVM/codegen cold-start from per-query times
-    next(iter(headline.values())).fn(spark, sf_dir).write.format("noop").mode(
+    # (the alphabetically first headline query, whatever the registry order)
+    headline[sorted(headline)[0]].fn(spark, sf_dir).write.format("noop").mode(
         "overwrite"
     ).save()
     # the warmup query may be cache-bearing: drop its blocks so the first
@@ -136,6 +139,9 @@ def main() -> None:
         "regressions from scheduler noise; queries_cold is each query's "
         "timed run 1, so it includes that query's codegen and JIT",
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
+        "sf_dir": sf_dir,
+        "cpus": spark.sparkContext.defaultParallelism,
+        "spark_version": spark.version,
         "host_load_start": load_start,
         "host_load_end": _host_load(),
         "host_busy": la1 > 2.0,

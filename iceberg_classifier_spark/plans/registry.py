@@ -9,13 +9,21 @@ hash identically. Oracles are stored as written and get two DuckDB rewrites
 (``materialize_shared_ctes``, ``normalize_round_signed_zero``) applied once,
 on first read of ``QueryDef.oracle``, so importing the registry costs no
 oracle rewriting.
+
+A plan module registers its queries with ``@query`` just by being in this
+package: ``load_all_queries()`` finds every name with one regex scan of the
+package's sources and imports a plan module only when one of its queries is
+looked up, or when the registry is iterated, which imports them all.
 """
 
 from __future__ import annotations
 
+import glob
+import importlib
+import os
 import re
 from collections import Counter
-from collections.abc import Callable
+from collections.abc import Callable, Mapping
 from dataclasses import dataclass
 from functools import cache
 
@@ -186,9 +194,29 @@ def normalize_round_signed_zero(sql: str) -> str:
     return "".join(out)
 
 
+_QUERY_NAME = re.compile(r'@query\(\s*"([^"]+)"')
+
+
+@cache
+def _index() -> dict[str, str]:
+    """Query name → dotted plan module, from one scan of the package's
+    ``*.py`` files in sorted file order and, within a file, text order."""
+    index: dict[str, str] = {}
+    for path in sorted(glob.glob(os.path.join(os.path.dirname(__file__), "*.py"))):
+        module = f"{__package__}.{os.path.basename(path)[:-3]}"
+        with open(path, encoding="utf-8") as f:
+            for name in _QUERY_NAME.findall(f.read()):
+                if name in index:
+                    raise ValueError(f"duplicate query name {name!r}")
+                index[name] = module
+    return index
+
+
 def query(name: str, oracle: str | None = None, headline: bool = False):
     """Decorator registering a query builder under ``name``. The oracle is
-    stored as written; ``QueryDef.oracle`` rewrites it on first read."""
+    stored as written; ``QueryDef.oracle`` rewrites it on first read. Write
+    the name as a double-quoted literal right after ``@query(`` in a module
+    of this package, where the scan in ``_index`` finds it."""
 
     def deco(fn: QueryFn) -> QueryFn:
         if name in REGISTRY:
@@ -214,9 +242,6 @@ def _rotation_offset(n: int) -> int:
     if not n:
         return 0
     try:
-        import glob
-        import os
-
         root = os.path.dirname(
             os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
         )
@@ -226,179 +251,53 @@ def _rotation_offset(n: int) -> int:
     return (k * 50) % n
 
 
-def load_all_queries() -> dict[str, QueryDef]:
-    """Import every query module (side-effect: fills REGISTRY)."""
-    from iceberg_classifier_spark.plans import (  # noqa: F401
-        relational,
-        relational2,
-        relational3,
-        relational4,
-        curation2,
-        curation3,
-        curation4,
-        behavior,
-        scaleops,
-        vectors,
-        vectors2,
-        profiling,
-        mlprep,
-        stacking,
-        textops,
-        dedup,
-        similarity,
-        mlpipe,
-        multimodal,
-        streaming_q,
-        streaming_q2,
-        dedup3,
-        advanced,
-        advanced2,
-        advanced3,
-        analytics,
-        analytics2,
-        analytics3,
-        analytics4,
-        analytics5,
-        analytics6,
-        search,
-        pipeline_ops,
-        warehouse2,
-        geo,
-        pysource,
-        modernapi,
-        modernapi2,
-        governance,
-        warehouse4,
-        textops3,
-        modernapi3,
-        curation5,
-        transfer,
-        curation6,
-        analytics7,
-        linkage,
-        profiling2,
-        closedform,
-        curation7,
-        advanced4,
-        vectors3,
-        search2,
-        layout,
-        analytics8,
-        evalops,
-        evalops2,
-        textops4,
-        evalops3,
-        mlops2,
-        search3,
-        warehouse5,
-        bizops,
-        governance2,
-        bizops2,
-        analytics9,
-        bizops3,
-        multimodal2,
-        analytics10,
-        sysops,
-        recsys,
-        dqops,
-        graph2,
-        robustops,
-        dedup2,
-        analytics11,
-        analytics12,
-        mlscore,
-        textops5,
-        linkage2,
-        analytics13,
-        search4,
-        analytics14,
-        evalops4,
-        bizops4,
-        attribution,
-        analytics15,
-        curation8,
-        curation9,
-        linkage3,
-        analytics16,
-        search5,
-        analytics17,
-        analytics18,
-        textops6,
-        analytics19,
-        analytics20,
-        multimodal3,
-        evalops5,
-        mlscore2,
-        analytics21,
-        multimodal4,
-        expops,
-        analytics22,
-        analytics23,
-        analytics24,
-        analytics25,
-        analytics26,
-        analytics27,
-        textops7,
-        analytics28,
-        analytics29,
-        analytics30,
-        analytics31,
-        analytics32,
-        analytics33,
-        textops8,
-        sysops2,
-        vectors4,
-        multimodal5,
-        analytics34,
-        search6,
-        mlscore3,
-        glmtree,
-        econx,
-        analytics35,
-        statx,
-        finops,
-        evalx,
-        featsel,
-        boostx,
-        privstat,
-        recsysx,
-        sysx,
-        econx2,
-        multimodal6,
-        multimodal7,
-        statx2,
-        causalx,
-        otx,
-        nmfx,
-        matchx,
-        ratingx,
-        graphx2,
-        anomx,
-        dpx,
-        barcodex,
-        scmx,
-        flowx,
-        tsdbx,
-        spatx,
-        auctx,
-        finx2,
-        contrastx,
-        dspx,
-        privx2,
-        votx,
-        cryptx,
-        cnnx,
-    )
+class Queries(Mapping[str, QueryDef]):
+    """Read-only view of the registry over the plan scan's name → module
+    index. ``m[name]`` imports only the module that defines ``name``;
+    ``in`` and ``len`` read the index and import nothing; iteration imports
+    every plan module and yields the names in ``_ordered`` order."""
 
-    # Rotate over the oracle-backed keys ONLY, and append the rows-only
-    # (oracle=None) MLlib fits at the end: the external driver value-checks
-    # the FIRST 50 entries of queries() in iteration order, so an
-    # oracle-less entry inside the window burns a verification slot on a
-    # rows-only check (r7's early_stopping_head). With this ordering every
-    # driver slot verifies a value hash.
-    keys = list(REGISTRY)
-    with_oracle = [k for k in keys if REGISTRY[k].raw_oracle is not None]
-    rows_only = [k for k in keys if REGISTRY[k].raw_oracle is None]
+    def __init__(self, index: dict[str, str]) -> None:
+        self._index = index
+
+    def __getitem__(self, name: str) -> QueryDef:
+        importlib.import_module(self._index[name])
+        return REGISTRY[name]
+
+    def __contains__(self, name: object) -> bool:
+        return name in self._index
+
+    def __len__(self) -> int:
+        return len(self._index)
+
+    def __iter__(self):
+        return iter(_ordered(self._index))
+
+
+def _ordered(index: dict[str, str]) -> list[str]:
+    """Import every plan module, then order the names from the scan order,
+    so the result does not depend on which lookups ran before.
+
+    Rotate over the oracle-backed names ONLY, and append the rows-only
+    (oracle=None) MLlib fits at the end: the external driver value-checks
+    the FIRST 50 entries of queries() in iteration order, so an
+    oracle-less entry inside the window burns a verification slot on a
+    rows-only check (r7's early_stopping_head). With this ordering every
+    driver slot verifies a value hash."""
+    for module in dict.fromkeys(index.values()):
+        importlib.import_module(module)
+    with_oracle = [k for k in index if REGISTRY[k].raw_oracle is not None]
+    rows_only = [k for k in index if REGISTRY[k].raw_oracle is None]
     off = _rotation_offset(len(with_oracle))
-    ordered = with_oracle[off:] + with_oracle[:off] + rows_only
-    return {k: REGISTRY[k] for k in ordered}
+    return with_oracle[off:] + with_oracle[:off] + rows_only
+
+
+def load_all_queries() -> Queries:
+    """The registry as a read-only mapping: a lookup imports only the plan
+    module that defines the query, iteration imports every plan module.
+
+    Names come from one regex scan of ``plans/*.py`` in sorted file order,
+    so a module is registered just by being in this package. Iteration
+    order is that scan order with the oracle-backed names rotated by
+    ``_rotation_offset`` and the rows-only names last."""
+    return Queries(_index())

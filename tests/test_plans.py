@@ -267,7 +267,7 @@ def test_ngram_jaccard_stop_shingle_cap_bounds_pair_emission(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from iceberg_classifier_spark.plans.dedup import NGRAM_DF_CAP
-    from iceberg_classifier_spark.plans.registry import REGISTRY as R
+    R = load_all_queries()
 
     n_hot = NGRAM_DF_CAP + 100
     rows = [(i, "the same hot boilerplate line repeated") for i in range(n_hot)]
@@ -298,7 +298,7 @@ def test_observe_does_not_poison_mllib_arrow_collect(spark, sf_dir):
     (toPandas), which is what the driver's correctness gate uses, so a
     count()-based check cannot catch the regression. observe must run on
     an isolated session clone."""
-    from iceberg_classifier_spark.plans.registry import REGISTRY as R
+    R = load_all_queries()
 
     assert len(R["observe_pipeline_metrics"].fn(spark, sf_dir).toPandas()) == 1
     tta = R["tta_ten_crop_predict"].fn(spark, sf_dir).toPandas()

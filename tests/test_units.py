@@ -676,21 +676,12 @@ def test_mtld_packed_fold_bounds_and_equivalence():
         assert acc % _MTLD_P15 == int(fac)
 
 
-def test_registry_load_does_no_oracle_rewrite():
-    """Importing and ordering the registry must not rewrite any oracle:
-    both rewrites are replaced by a raiser before a fresh interpreter
-    imports every plan module."""
+def _fresh_python(code: str) -> str:
+    """Run ``code`` in a new interpreter at the repo root; return stdout."""
     import subprocess
     import sys
     from pathlib import Path
 
-    code = (
-        "import iceberg_classifier_spark.plans.registry as reg\n"
-        "def boom(sql):\n"
-        "    raise AssertionError('oracle rewritten during registry load')\n"
-        "reg.materialize_shared_ctes = reg.normalize_round_signed_zero = boom\n"
-        "print(len(reg.load_all_queries()))\n"
-    )
     r = subprocess.run(
         [sys.executable, "-c", code],
         capture_output=True,
@@ -698,7 +689,21 @@ def test_registry_load_does_no_oracle_rewrite():
         cwd=Path(__file__).resolve().parents[1],
     )
     assert r.returncode == 0, r.stderr[-2000:]
-    assert int(r.stdout.split()[-1]) > 500
+    return r.stdout
+
+
+def test_registry_load_does_no_oracle_rewrite():
+    """Importing and ordering the registry must not rewrite any oracle:
+    both rewrites are replaced by a raiser before a fresh interpreter
+    imports every plan module."""
+    out = _fresh_python(
+        "import iceberg_classifier_spark.plans.registry as reg\n"
+        "def boom(sql):\n"
+        "    raise AssertionError('oracle rewritten during registry load')\n"
+        "reg.materialize_shared_ctes = reg.normalize_round_signed_zero = boom\n"
+        "print(len(dict(reg.load_all_queries())))\n"
+    )
+    assert int(out.split()[-1]) > 500
 
 
 def test_oracle_read_rewrites_once_and_caches():
@@ -717,6 +722,75 @@ def test_oracle_read_rewrites_once_and_caches():
         assert first == normalize_round_signed_zero(
             materialize_shared_ctes(qd.raw_oracle)
         ), name
+
+
+def test_registry_lookup_imports_only_its_plan_module():
+    out = _fresh_python(
+        "import sys\n"
+        "from iceberg_classifier_spark.plans.registry import load_all_queries\n"
+        "load_all_queries()['dedup_ngram_jaccard']\n"
+        "print(sorted(m for m in sys.modules"
+        " if m.startswith('iceberg_classifier_spark.plans')))\n"
+    )
+    assert out.splitlines()[-1] == str(
+        [
+            "iceberg_classifier_spark.plans",
+            "iceberg_classifier_spark.plans.dedup",
+            "iceberg_classifier_spark.plans.registry",
+        ]
+    )
+
+
+def test_registry_scan_agrees_with_decorator():
+    """Every ``@query`` name is found once by the source scan, in the module
+    whose import registers it, and the scan finds nothing else."""
+    from pathlib import Path
+
+    from iceberg_classifier_spark.plans import registry as reg
+
+    index = reg._index()
+    found = [
+        n
+        for p in Path(reg.__file__).parent.glob("*.py")
+        for n in reg._QUERY_NAME.findall(p.read_text(encoding="utf-8"))
+    ]
+    assert len(found) == len(index) == 601
+    registered = dict(reg.load_all_queries())
+    assert set(registered) == set(index) == set(reg.REGISTRY)
+    for name, qd in registered.items():
+        assert qd.fn.__module__ == index[name], name
+
+
+def test_registry_order_does_not_depend_on_lookups():
+    """Looking up a query of the last plan module first (which imports that
+    module before all others) leaves the iteration order unchanged."""
+    from iceberg_classifier_spark.plans import registry as reg
+
+    last = list(reg._index())[-1]
+    prelude = (
+        "import json\n"
+        "from iceberg_classifier_spark.plans.registry import load_all_queries\n"
+    )
+    keys = "print(json.dumps(list(load_all_queries())))\n"
+    lookup_first = _fresh_python(prelude + f"load_all_queries()[{last!r}]\n" + keys)
+    iterate_first = _fresh_python(prelude + keys)
+    order = json.loads(iterate_first.splitlines()[-1])
+    assert json.loads(lookup_first.splitlines()[-1]) == order
+    assert len(order) == 601
+
+
+def test_registry_unknown_name_imports_nothing():
+    import sys
+
+    from iceberg_classifier_spark.plans.registry import load_all_queries
+
+    m = load_all_queries()
+    before = set(sys.modules)
+    with pytest.raises(KeyError):
+        m["no_such_query"]
+    assert "no_such_query" not in m
+    assert m.get("no_such_query") is None
+    assert set(sys.modules) == before
 
 
 def _write_ids(path, ids):
