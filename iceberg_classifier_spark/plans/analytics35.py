@@ -31,6 +31,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from iceberg_classifier_spark.operators.terms import (
+    QUERY_RANKS,
+    doc_freq,
+    query_id,
+    ranked_words,
+    word_tokens,
+)
 from iceberg_classifier_spark.plans.registry import query
 from iceberg_classifier_spark.sources.tables import load
 
@@ -305,38 +312,18 @@ def err_ranking_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     fold bit-identically. Graded complement of the binary
     `session_mrr` / `ndcg_ann_eval` metrics.
 
-    Scale: posting work is per-term (6 terms broadcast); per-query
-    ranking windows are per-query-bounded; the fold touches 10
-    rows per query.
+    Scale: vocabulary ranking is bounded to max(ranks) rows
+    (TakeOrdered, then the rank window); posting work is per-term (6
+    terms broadcast); per-query ranking windows are per-query-bounded;
+    the fold touches 10 rows per query.
     """
-    d = load(spark, sf_dir, "documents")
-    toks = d.select(
-        "doc_id", F.explode(F.split(F.trim(F.col("text")), " ")).alias("word")
-    )
+    toks = word_tokens(load(spark, sf_dir, "documents"), "doc_id")
     tf = toks.groupBy("doc_id", "word").agg(
         F.count(F.lit(1)).cast("bigint").alias("tf")
     )
     corpus = toks.agg(F.countDistinct("doc_id").cast("bigint").alias("n"))
-    rankedw = (
-        toks.groupBy("word")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .select(
-            "word",
-            F.row_number().over(Window.orderBy(F.desc("cnt"), "word")).alias("rk"),
-        )
-    )
-    terms = rankedw.filter(F.col("rk").isin(3, 8, 13, 18, 23, 28)).select(
-        "word",
-        F.when(F.col("rk").isin(3, 8), 1)
-        .when(F.col("rk").isin(13, 18), 2)
-        .otherwise(3)
-        .alias("query_id"),
-    )
-    dfreq = (
-        tf.join(F.broadcast(terms.select("word")), "word")
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("df"))
-    )
+    terms = ranked_words(toks, QUERY_RANKS).select("word", query_id())
+    dfreq = doc_freq(tf, terms)
     scored = (
         tf.join(F.broadcast(terms), "word")
         .join(F.broadcast(dfreq), "word")

@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from iceberg_classifier_spark.operators.prefix import running_sums
+from iceberg_classifier_spark.operators.terms import ranked_words, word_tokens
 from iceberg_classifier_spark.plans.registry import query
 from iceberg_classifier_spark.sources.tables import load
 
@@ -613,18 +614,8 @@ def zipf_token_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one map-side-combinable token count, then a global top-k
     (TakeOrdered — never a full sort); the regression runs on 256 points.
     """
-    w = load(spark, sf_dir, "documents").select(
-        F.explode(F.split(F.trim(F.col("text")), " ")).alias("word")
-    )
-    cnt = w.groupBy("word").agg(F.count(F.lit(1)).cast("bigint").alias("c"))
-    top = (
-        cnt.orderBy(F.desc("c"), "word")
-        .limit(_ZIPF_TOP)
-        .select(
-            "word",
-            "c",
-            F.row_number().over(Window.orderBy(F.desc("c"), "word")).alias("rk"),
-        )
+    top = ranked_words(
+        word_tokens(load(spark, sf_dir, "documents")), range(1, _ZIPF_TOP + 1)
     )
     pts = top.select(
         "rk",

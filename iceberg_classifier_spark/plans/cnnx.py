@@ -87,9 +87,12 @@ def _unpack(w):
     return W1, b1, W2, b2
 
 
-def _epoch_kernel(W1, b1, W2, b2):
-    """Arrow kernel for one epoch: per-batch exact int64 partials of
-    (grad, loss, n, correct). Closure-captures the epoch's weights."""
+def _split_epoch_kernel(W1, b1, W2, b2):
+    """Arrow kernel for one epoch: per-batch exact int64 partials of the
+    gradient, row-masked to the TRAIN split (column ``t``, 1.0 = train
+    row), and of loss/accuracy separately for train and val — one
+    distributed scan per epoch covers both the update and the validation
+    metric. Closure-captures the epoch's weights."""
     import numpy as np
     import pandas as pd
 
@@ -101,6 +104,7 @@ def _epoch_kernel(W1, b1, W2, b2):
                 continue
             X = np.stack(pdf["x"].to_numpy()).astype(np.float64)  # (n, 64)
             y = pdf["y"].to_numpy(dtype=np.float64)
+            t = pdf["t"].to_numpy(dtype=np.float64)  # 1.0 = train row
             n = len(X)
             G = X.reshape(n, 8, 8)
             # im2col: 6x6 valid 3x3 patches -> (n, 36, 9)
@@ -122,78 +126,12 @@ def _epoch_kernel(W1, b1, W2, b2):
             p = 1.0 / (1.0 + np.exp(-z2))
             eps = 1e-12
             loss_row = -(y * np.log(p + eps) + (1 - y) * np.log(1 - p + eps))
-            correct = ((p >= 0.5) == (y >= 0.5)).sum()
-            # backward (per-row grads; the mean happens at the driver)
-            dz2 = p - y  # (n,)
-            gW2 = Feat * dz2[:, None]  # (n, 9*nf)
-            gb2 = dz2[:, None]  # (n, 1)
-            dFeat = W2[None, :] * dz2[:, None]  # (n, 9*nf)
-            dPool = dFeat.reshape(n, 3, 3, _NF) / 4.0
-            dA = np.zeros((n, 6, 6, _NF))
-            dA[:, 0::2, 0::2] = dPool
-            dA[:, 1::2, 0::2] = dPool
-            dA[:, 0::2, 1::2] = dPool
-            dA[:, 1::2, 1::2] = dPool
-            dZ1 = dA.reshape(n, 36, _NF) * (Z1 > 0.0)
-            gW1 = np.einsum("npf,npk->nfk", dZ1, P).reshape(n, _NF * 9)
-            gb1 = dZ1.sum(axis=1)  # (n, nf)
-            grads = np.concatenate([gW1, gb1, gW2, gb2], axis=1)
-            gi = half_away(grads * _GSCALE).astype(np.int64).sum(axis=0)
-            li = int(half_away(loss_row * _LSCALE).astype(np.int64).sum())
-            yield pd.DataFrame(
-                {
-                    "g": [gi.tolist()],
-                    "loss_i": [li],
-                    "n": [n],
-                    "correct": [int(correct)],
-                }
-            )
-
-    return run
-
-
-def _split_epoch_kernel(W1, b1, W2, b2):
-    """Arrow kernel for one epoch of the val-split variant: same
-    forward/backward math as ``_epoch_kernel``, but gradients are
-    row-masked to the TRAIN split while loss/accuracy partials are
-    emitted separately for train and val — one distributed scan per
-    epoch covers both the update and the validation metric."""
-    import numpy as np
-    import pandas as pd
-
-    from iceberg_classifier_spark.functions.quantize import half_away
-
-    def run(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            X = np.stack(pdf["x"].to_numpy()).astype(np.float64)  # (n, 64)
-            y = pdf["y"].to_numpy(dtype=np.float64)
-            t = pdf["t"].to_numpy(dtype=np.float64)  # 1.0 = train row
-            n = len(X)
-            G = X.reshape(n, 8, 8)
-            P = np.empty((n, 36, 9), dtype=np.float64)
-            for i in range(6):
-                for j in range(6):
-                    P[:, i * 6 + j, :] = G[:, i : i + 3, j : j + 3].reshape(
-                        n, 9
-                    )
-            Z1 = P @ W1.T + b1[None, None, :]
-            A1 = np.maximum(Z1, 0.0)
-            A = A1.reshape(n, 6, 6, _NF)
-            Pool = (
-                A[:, 0::2, 0::2] + A[:, 1::2, 0::2] + A[:, 0::2, 1::2] + A[:, 1::2, 1::2]
-            ) / 4.0
-            Feat = Pool.reshape(n, _NP)
-            z2 = Feat @ W2 + b2
-            p = 1.0 / (1.0 + np.exp(-z2))
-            eps = 1e-12
-            loss_row = -(y * np.log(p + eps) + (1 - y) * np.log(1 - p + eps))
             hit = ((p >= 0.5) == (y >= 0.5)).astype(np.int64)
-            # backward, with every per-row gradient masked by the split
-            # BEFORE quantization — val rows contribute exactly 0 to the
-            # int64 partial sums, so the trajectory is identical to
-            # training on the train split alone
+            # backward (per-row grads; the mean happens at the driver),
+            # with every per-row gradient masked by the split BEFORE
+            # quantization — val rows contribute exactly 0 to the int64
+            # partial sums, so the trajectory is identical to training on
+            # the train split alone
             dz2 = (p - y) * t
             gW2 = Feat * dz2[:, None]
             gb2 = dz2[:, None]
@@ -224,6 +162,40 @@ def _split_epoch_kernel(W1, b1, W2, b2):
             )
 
     return run
+
+
+_COUNTS = ("tr_loss_i", "tr_n", "tr_correct", "va_loss_i", "va_n", "va_correct")
+
+
+def _epoch_stats(e: DataFrame, w):
+    """One epoch over ``e`` (x, y, t) at weights ``w``: the kernel's
+    partials folded to one Row — the gradient by an integer zip_with
+    reduction, the counts by exact sums."""
+    part = e.mapInPandas(
+        _split_epoch_kernel(*_unpack(w)),
+        "g array<long>, " + ", ".join(f"{c} long" for c in _COUNTS),
+    )
+    zero = f"array_repeat(CAST(0 AS BIGINT), {_NPARAM})"
+    return part.agg(
+        F.expr(
+            f"aggregate(collect_list(g), {zero},"
+            " (a, x) -> zip_with(a, x, (p, q) -> p + q))"
+        ).alias("g"),
+        *(F.sum(c).alias(c) for c in _COUNTS),
+    ).collect()[0]
+
+
+def _adam_step(w, m, v, g, epoch):
+    """One Adam update of weights ``w`` by mean gradient ``g``; returns
+    the new ``(w, m, v)``. Adam state lives driver-side next to the
+    weights."""
+    import numpy as np
+
+    m = _ADAM_B1 * m + (1.0 - _ADAM_B1) * g
+    v = _ADAM_B2 * v + (1.0 - _ADAM_B2) * g * g
+    mh = m / (1.0 - _ADAM_B1 ** (epoch + 1))
+    vh = v / (1.0 - _ADAM_B2 ** (epoch + 1))
+    return w - _ADAM_LR * mh / (np.sqrt(vh) + _ADAM_EPS), m, v
 
 
 _ES_MAX_EPOCHS = 60
@@ -275,33 +247,12 @@ def cnn_sgd_val_early_stop(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = _init_weights()
     m = np.zeros(_NPARAM)
     v = np.zeros(_NPARAM)
-    zero = f"array_repeat(CAST(0 AS BIGINT), {_NPARAM})"
-    schema = (
-        "g array<long>, tr_loss_i long, tr_n long, tr_correct long,"
-        " va_loss_i long, va_n long, va_correct long"
-    )
-
-    def epoch_stats(weights):
-        part = e.mapInPandas(_split_epoch_kernel(*_unpack(weights)), schema)
-        return part.agg(
-            F.expr(
-                f"aggregate(collect_list(g), {zero},"
-                " (a, x) -> zip_with(a, x, (p, q) -> p + q))"
-            ).alias("g"),
-            F.sum("tr_loss_i").alias("tr_loss_i"),
-            F.sum("tr_n").alias("tr_n"),
-            F.sum("tr_correct").alias("tr_correct"),
-            F.sum("va_loss_i").alias("va_loss_i"),
-            F.sum("va_n").alias("va_n"),
-            F.sum("va_correct").alias("va_correct"),
-        ).collect()[0]
-
     history = []
     best_loss_i = None
     best_epoch = -1
     best_w = w.copy()
     for epoch in range(_ES_MAX_EPOCHS):
-        row = epoch_stats(w)
+        row = _epoch_stats(e, w)
         tr_n, va_n = row["tr_n"], row["va_n"]
         history.append(
             (
@@ -319,14 +270,10 @@ def cnn_sgd_val_early_stop(spark: SparkSession, sf_dir: str) -> DataFrame:
         elif epoch - best_epoch >= _ES_PATIENCE:
             break
         g = np.array(row["g"], dtype=np.float64) / _GSCALE / tr_n
-        m = _ADAM_B1 * m + (1.0 - _ADAM_B1) * g
-        v = _ADAM_B2 * v + (1.0 - _ADAM_B2) * g * g
-        mh = m / (1.0 - _ADAM_B1 ** (epoch + 1))
-        vh = v / (1.0 - _ADAM_B2 ** (epoch + 1))
-        w = w - _ADAM_LR * mh / (np.sqrt(vh) + _ADAM_EPS)
+        w, m, v = _adam_step(w, m, v, g, epoch)
     # restore best weights and re-score the val split from scratch — the
     # reference's restore_best_weights, proven by exact-int equality
-    final = epoch_stats(best_w)
+    final = _epoch_stats(e, best_w)
     restored_ok = final["va_loss_i"] == best_loss_i
     best_va_acc = final["va_correct"] * 1_000_000 // final["va_n"]
     va_pos = e.where("t < 0.5").agg(
@@ -379,47 +326,33 @@ def cnn_sgd_grid_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     accuracy — plus the two quality flags the rows-only gate asserts."""
     import numpy as np
 
+    # every row is a train row: the split kernel's gradient mask is a
+    # multiply by 1.0 (exact), and its tr_* partials are the totals
     e = load(spark, sf_dir, "embeddings").select(
         F.transform("embedding", lambda v: v.cast("double")).alias("x"),
         (F.col("label") >= 5).cast("double").alias("y"),
+        F.lit(1.0).alias("t"),
     ).cache()  # 40 epochs re-scan this narrow frame; unpersisted below
     w = _init_weights()
-    # Adam state lives driver-side next to the weights (the reference
-    # fine-tunes with Adam, main.py:207 — full-batch GD at any fixed LR
-    # either crawled or oscillated on this loss surface; Adam's
-    # per-parameter scaling converges in 40 epochs on every frame)
+    # Adam (the reference fine-tunes with Adam, main.py:207 — full-batch
+    # GD at any fixed LR either crawled or oscillated on this loss
+    # surface; Adam's per-parameter scaling converges in 40 epochs on
+    # every frame)
     m = np.zeros(_NPARAM)
     v = np.zeros(_NPARAM)
-    zero = f"array_repeat(CAST(0 AS BIGINT), {_NPARAM})"
     history = []
     for epoch in range(_EPOCHS):
-        part = e.mapInPandas(
-            _epoch_kernel(*_unpack(w)),
-            "g array<long>, loss_i long, n long, correct long",
-        )
-        row = part.agg(
-            F.expr(
-                f"aggregate(collect_list(g), {zero},"
-                " (a, x) -> zip_with(a, x, (p, q) -> p + q))"
-            ).alias("g"),
-            F.sum("loss_i").alias("loss_i"),
-            F.sum("n").alias("n"),
-            F.sum("correct").alias("correct"),
-        ).collect()[0]
-        n = row["n"]
+        row = _epoch_stats(e, w)
+        n = row["tr_n"]
         g = np.array(row["g"], dtype=np.float64) / _GSCALE / n
         history.append(
             (
                 epoch,
-                row["loss_i"] / _LSCALE / n,
-                row["correct"] * 1_000_000 // n,
+                row["tr_loss_i"] / _LSCALE / n,
+                row["tr_correct"] * 1_000_000 // n,
             )
         )
-        m = _ADAM_B1 * m + (1.0 - _ADAM_B1) * g
-        v = _ADAM_B2 * v + (1.0 - _ADAM_B2) * g * g
-        mh = m / (1.0 - _ADAM_B1 ** (epoch + 1))
-        vh = v / (1.0 - _ADAM_B2 ** (epoch + 1))
-        w = w - _ADAM_LR * mh / (np.sqrt(vh) + _ADAM_EPS)
+        w, m, v = _adam_step(w, m, v, g, epoch)
     e.unpersist()
     # majority-class ppm for the baseline flag (exact ints)
     base = e.agg(

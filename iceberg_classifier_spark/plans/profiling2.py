@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from iceberg_classifier_spark.operators.terms import ranked_words, word_tokens
 from iceberg_classifier_spark.plans.registry import query
 from iceberg_classifier_spark.sources.tables import load
 
@@ -226,24 +227,11 @@ def boolean_retrieval_and(spark: SparkSession, sf_dir: str) -> DataFrame:
     distributed AND); top-{_AND_TOPK} is a TakeOrdered limit, never a
     global rank, with the row_number applied on the bounded result.
     """
-    toks = load(spark, sf_dir, "documents").select(
-        "doc_id", F.explode(F.split(F.trim(F.col("text")), " ")).alias("word")
-    )
+    toks = word_tokens(load(spark, sf_dir, "documents"), "doc_id")
     tf = toks.groupBy("doc_id", "word").agg(
         F.count(F.lit(1)).cast("bigint").alias("tf")
     )
-    terms = (
-        toks.groupBy("word")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .orderBy(F.desc("c"), "word")
-        .limit(max(_AND_RANKS))
-        .select(
-            "word",
-            F.row_number().over(Window.orderBy(F.desc("c"), "word")).alias("rk"),
-        )
-        .where(F.col("rk").isin(*_AND_RANKS))
-        .select("word")
-    )
+    terms = ranked_words(toks, _AND_RANKS).select("word")
     hits = (
         tf.join(F.broadcast(terms), "word")
         .groupBy("doc_id")

@@ -12,14 +12,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from iceberg_classifier_spark.operators.terms import (
+    QUERY_RANKS,
+    doc_freq,
+    query_id,
+    ranked_words,
+    word_tokens,
+)
 from iceberg_classifier_spark.plans.registry import query
-from iceberg_classifier_spark.sources.tables import load, load_parallel
+from iceberg_classifier_spark.sources.tables import load
 
 _BM25_K1 = 1.2
 _BM25_B = 0.75
-# (frequency-rank, query_id): two terms per query, three queries. Ranks
-# stay within the testdata's compact vocabulary (~30 distinct tokens).
-_QUERY_RANKS = {3: 1, 8: 1, 13: 2, 18: 2, 23: 3, 28: 3}
 _BM25_TOPK = 10
 
 
@@ -90,9 +94,7 @@ def bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     # NOT load_parallel: the token explode is cheap relative to the extra
     # round-robin exchange it would add (measured 1.2 s -> 2.8 s at sf0.1);
     # the groupBys below parallelize after their own exchanges anyway
-    toks = load(spark, sf_dir, "documents").select(
-        "doc_id", F.explode(F.split(F.trim(F.col("text")), " ")).alias("word")
-    )
+    toks = word_tokens(load(spark, sf_dir, "documents"), "doc_id")
     # doc lengths and vocabulary ranks aggregate straight off the token
     # stream with map-side combine — their shuffles carry |docs| / |vocab|
     # rows; routing them through the wide (doc, word) tf exchange instead
@@ -103,23 +105,7 @@ def bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.sum("dl").cast("bigint").alias("total_dl"),
     )
-    rank_case = "CASE WHEN rk IN (3, 8) THEN 1 WHEN rk IN (13, 18) THEN 2 ELSE 3 END"
-    # top-28 via TakeOrdered (bounded), THEN rank within the 28-row frame —
-    # never a row_number window over the full vocabulary dimension
-    top28 = (
-        toks.groupBy("word")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .orderBy(F.desc("c"), "word")
-        .limit(max(_QUERY_RANKS))
-    )
-    terms = (
-        top28.select(
-            "word",
-            F.row_number().over(Window.orderBy(F.desc("c"), "word")).alias("rk"),
-        )
-        .where(F.col("rk").isin(*_QUERY_RANKS))
-        .select("word", F.expr(rank_case).alias("query_id"))
-    )
+    terms = ranked_words(toks, QUERY_RANKS).select("word", query_id())
     # NOTE(r10 opt): pruning toks to the 6 query terms with a broadcast
     # semi-join BEFORE this aggregation was tried and A/B-measured 1.15×
     # SLOWER at sf0.1 — the query terms are the corpus's most frequent
@@ -131,11 +117,7 @@ def bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     tf = toks.groupBy("doc_id", "word").agg(
         F.count(F.lit(1)).cast("bigint").alias("tf")
     )
-    dfreq = (
-        tf.join(F.broadcast(terms.select("word")), "word")
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("df"))
-    )
+    dfreq = doc_freq(tf, terms)
     idf = F.log(1 + (F.col("n") - F.col("df") + 0.5) / (F.col("df") + 0.5))
     tf_part = (
         F.col("tf")

@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from iceberg_classifier_spark.operators.terms import ranked_words, word_tokens
 from iceberg_classifier_spark.plans.registry import query
 from iceberg_classifier_spark.sources.tables import load
 
@@ -72,23 +73,11 @@ def rrf_hybrid_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape); the final top-{_RRF_TOPK} is a TakeOrdered merge with
     row_number applied on the bounded result.
     """
-    toks = load(spark, sf_dir, "documents").select(
-        "doc_id", F.explode(F.split(F.trim(F.col("text")), " ")).alias("word")
-    )
+    toks = word_tokens(load(spark, sf_dir, "documents"), "doc_id")
     tf = toks.groupBy("doc_id", "word").agg(
         F.count(F.lit(1)).cast("bigint").alias("tf")
     )
-    terms = (
-        toks.groupBy("word")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .orderBy(F.desc("c"), "word")
-        .limit(max(_RRF_RANKS))
-        .select(
-            "word",
-            F.row_number().over(Window.orderBy(F.desc("c"), "word")).alias("rk"),
-        )
-        .where(F.col("rk").isin(*_RRF_RANKS))
-    )
+    terms = ranked_words(toks, _RRF_RANKS).select("word", "rk")
     perterm = tf.join(F.broadcast(terms), "word").select(
         F.col("rk").alias("term_rank"),
         "doc_id",

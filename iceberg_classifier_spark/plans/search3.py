@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from iceberg_classifier_spark.operators.terms import ranked_words, word_tokens
 from iceberg_classifier_spark.plans.registry import query
 from iceberg_classifier_spark.sources.tables import load
 
@@ -218,9 +219,7 @@ def colbert_maxsim_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     semi-join on the query's token set, as bm25_search does.
     """
     docs = load(spark, sf_dir, "documents")
-    toks = docs.select(
-        "doc_id", F.explode(F.split(F.trim(F.col("text")), " ")).alias("word")
-    )
+    toks = word_tokens(docs, "doc_id")
     # within-doc distinct via array_distinct: the global distinct() on the
     # exploded (doc_id, word) frame shuffled every posting; per-doc
     # distinctness is a row-local property, so this explode needs NO
@@ -231,20 +230,9 @@ def colbert_maxsim_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.array_distinct(F.split(F.trim(F.col("text")), " "))
         ).alias("word"),
     )
-    terms = (
-        toks.groupBy("word")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .orderBy(F.desc("c"), "word")
-        .limit(max(_MAXSIM_RANKS))
-        .select(
-            "word",
-            F.row_number().over(Window.orderBy(F.desc("c"), "word")).alias("rk"),
-        )
-        .where(F.col("rk").isin(*_MAXSIM_RANKS))
-        .select(
-            F.col("word").alias("qw"),
-            F.md5(F.col("word").cast("binary")).alias("hq"),
-        )
+    terms = ranked_words(toks, _MAXSIM_RANKS).select(
+        F.col("word").alias("qw"),
+        F.md5(F.col("word").cast("binary")).alias("hq"),
     )
     # the md5 embedding + {_MAXSIM_DIM}-term dot depend only on (word, qw),
     # never on doc_id — score the VOCABULARY dimension once (|vocab| × 3

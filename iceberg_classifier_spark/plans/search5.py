@@ -14,6 +14,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from iceberg_classifier_spark.operators.terms import (
+    QUERY_RANKS,
+    query_id,
+    ranked_words,
+    word_tokens,
+)
 from iceberg_classifier_spark.plans.registry import query
 from iceberg_classifier_spark.sources.tables import load
 
@@ -94,10 +100,7 @@ def dirichlet_ql_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-10 per query is a bounded window merge (the `bm25_search`
     plan shape plus one broadcast prior).
     """
-    toks = load(spark, sf_dir, "documents").select(
-        "doc_id",
-        F.explode(F.split(F.trim(F.col("text")), " ")).alias("word"),
-    )
+    toks = word_tokens(load(spark, sf_dir, "documents"), "doc_id")
     tf = toks.groupBy("doc_id", "word").agg(
         F.count(F.lit(1)).cast("bigint").alias("tf")
     )
@@ -105,23 +108,8 @@ def dirichlet_ql_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("bigint").alias("dl")
     )
     corpus = dl.agg(F.sum("dl").cast("bigint").alias("total_dl"))
-    rank_case = (
-        "CASE WHEN rk IN (3, 8) THEN 1 WHEN rk IN (13, 18) THEN 2"
-        " ELSE 3 END"
-    )
-    top28 = (
-        toks.groupBy("word")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("cf"))
-        .orderBy(F.desc("cf"), "word")
-        .limit(28)
-    )
-    terms = (
-        top28.withColumn(
-            "rk",
-            F.row_number().over(Window.orderBy(F.desc("cf"), "word")),
-        )
-        .filter(F.col("rk").isin(3, 8, 13, 18, 23, 28))
-        .select("word", "cf", F.expr(rank_case).alias("query_id"))
+    terms = ranked_words(toks, QUERY_RANKS).select(
+        "word", F.col("c").alias("cf"), query_id()
     )
     prior = (
         terms.crossJoin(F.broadcast(corpus))

@@ -12,8 +12,9 @@ ranker's team — the online A/B-for-rankers primitive.
 pseudo-relevant documents (Rocchio with alpha=1, beta=0.5) and
 re-retrieves — the classic query-expansion loop.
 
-Query terms derive from corpus frequency ranks (the `bm25_search`
-convention) so both engines construct identical queries.
+Query terms derive from corpus frequency ranks
+(`operators.terms.QUERY_RANKS`, shared with `bm25_search`) so both
+engines construct identical queries.
 """
 
 from __future__ import annotations
@@ -21,6 +22,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from iceberg_classifier_spark.operators.terms import (
+    QUERY_RANKS,
+    doc_freq,
+    query_id,
+    ranked_words,
+    word_tokens,
+)
 from iceberg_classifier_spark.plans.registry import query
 from iceberg_classifier_spark.sources.tables import load
 
@@ -112,46 +120,21 @@ def champion_list_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     term weights (2-float addition is order-invariant); champion
     cuts break ties on (tf desc, doc_id).
 
-    Scale: champion ranking partitions BY TERM (posting-list
-    windows, never corpus-global); the champion arm's cost is
-    capped at |terms| x {_CL_M} rows regardless of corpus size —
-    that cap is the whole point of the operator.
+    Scale: vocabulary ranking is bounded to max(ranks) rows
+    (TakeOrdered, then the rank window); champion ranking partitions
+    BY TERM (posting-list windows, never corpus-global); the champion
+    arm's cost is capped at |terms| x {_CL_M} rows regardless of
+    corpus size — that cap is the whole point of the operator.
     """
-    d = load(spark, sf_dir, "documents")
-    toks = d.select(
-        "doc_id",
-        F.explode(F.split(F.trim(F.col("text")), " ")).alias("word"),
-    )
+    toks = word_tokens(load(spark, sf_dir, "documents"), "doc_id")
     tf = toks.groupBy("doc_id", "word").agg(
         F.count(F.lit(1)).cast("bigint").alias("tf")
     )
     corpus = toks.agg(
         F.countDistinct("doc_id").cast("bigint").alias("n")
     )
-    ranked = (
-        toks.groupBy("word")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .select(
-            "word",
-            F.row_number()
-            .over(Window.orderBy(F.desc("cnt"), "word"))
-            .alias("rk"),
-        )
-    )
-    terms = ranked.filter(
-        F.col("rk").isin(3, 8, 13, 18, 23, 28)
-    ).select(
-        "word",
-        F.when(F.col("rk").isin(3, 8), 1)
-        .when(F.col("rk").isin(13, 18), 2)
-        .otherwise(3)
-        .alias("query_id"),
-    )
-    dfreq = (
-        tf.join(F.broadcast(terms.select("word")), "word")
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("df"))
-    )
+    terms = ranked_words(toks, QUERY_RANKS).select("word", query_id())
+    dfreq = doc_freq(tf, terms)
     postings = (
         tf.join(F.broadcast(terms), "word")
         .join(F.broadcast(dfreq), "word")
@@ -326,16 +309,14 @@ def team_draft_interleaving(spark: SparkSession, sf_dir: str) -> DataFrame:
     position arithmetic and click rule are exact integers; per-doc
     scores sum exactly two term weights (order-invariant).
 
-    Scale: all windows partition by query (and the per-(query,doc)
-    frame is posting-bounded); no folds, no self-joins — the
-    interleave is pure rank arithmetic, which is what makes it
-    deployable inside a serving-log pipeline at any scale.
+    Scale: vocabulary ranking is bounded to max(ranks) rows
+    (TakeOrdered, then the rank window); all other windows partition
+    by query (and the per-(query,doc) frame is posting-bounded); no
+    folds, no self-joins — the interleave is pure rank arithmetic,
+    which is what makes it deployable inside a serving-log pipeline at
+    any scale.
     """
-    d = load(spark, sf_dir, "documents")
-    toks = d.select(
-        "doc_id",
-        F.explode(F.split(F.trim(F.col("text")), " ")).alias("word"),
-    )
+    toks = word_tokens(load(spark, sf_dir, "documents"), "doc_id")
     tf = toks.groupBy("doc_id", "word").agg(
         F.count(F.lit(1)).cast("bigint").alias("tf")
     )
@@ -349,30 +330,8 @@ def team_draft_interleaving(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("dl").cast("bigint").alias("total_dl"),
         F.count(F.lit(1)).cast("bigint").alias("nd"),
     )
-    ranked_w = (
-        toks.groupBy("word")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .select(
-            "word",
-            F.row_number()
-            .over(Window.orderBy(F.desc("cnt"), "word"))
-            .alias("rk"),
-        )
-    )
-    terms = ranked_w.filter(
-        F.col("rk").isin(3, 8, 13, 18, 23, 28)
-    ).select(
-        "word",
-        F.when(F.col("rk").isin(3, 8), 1)
-        .when(F.col("rk").isin(13, 18), 2)
-        .otherwise(3)
-        .alias("query_id"),
-    )
-    dfreq = (
-        tf.join(F.broadcast(terms.select("word")), "word")
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("df"))
-    )
+    terms = ranked_words(toks, QUERY_RANKS).select("word", query_id())
+    dfreq = doc_freq(tf, terms)
     idf_a = F.log(F.col("n") * 1.0 / F.col("df"))
     idf_b = F.log(
         1 + (F.col("n") - F.col("df") + 0.5) / (F.col("df") + 0.5)
@@ -576,44 +535,19 @@ def rocchio_prf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: the expansion mining joins postings only for the
     {_PRF_DOCS}-doc seed set per query (broadcast); rescoring
-    touches the postings of <= |q|+{_PRF_TERMS} terms; every window
-    partitions by query.
+    touches the postings of <= |q|+{_PRF_TERMS} terms; vocabulary
+    ranking is bounded to max(ranks) rows (TakeOrdered, then the rank
+    window) and every other window partitions by query.
     """
-    d = load(spark, sf_dir, "documents")
-    toks = d.select(
-        "doc_id",
-        F.explode(F.split(F.trim(F.col("text")), " ")).alias("word"),
-    )
+    toks = word_tokens(load(spark, sf_dir, "documents"), "doc_id")
     tf = toks.groupBy("doc_id", "word").agg(
         F.count(F.lit(1)).cast("bigint").alias("tf")
     )
     corpus = toks.agg(
         F.countDistinct("doc_id").cast("bigint").alias("n")
     )
-    ranked_w = (
-        toks.groupBy("word")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .select(
-            "word",
-            F.row_number()
-            .over(Window.orderBy(F.desc("cnt"), "word"))
-            .alias("rk"),
-        )
-    )
-    terms = ranked_w.filter(
-        F.col("rk").isin(3, 8, 13, 18, 23, 28)
-    ).select(
-        "word",
-        F.when(F.col("rk").isin(3, 8), 1)
-        .when(F.col("rk").isin(13, 18), 2)
-        .otherwise(3)
-        .alias("query_id"),
-    )
-    dfreq = (
-        tf.join(F.broadcast(terms.select("word")), "word")
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("df"))
-    )
+    terms = ranked_words(toks, QUERY_RANKS).select("word", query_id())
+    dfreq = doc_freq(tf, terms)
     alldf = tf.groupBy("word").agg(
         F.count(F.lit(1)).cast("bigint").alias("df")
     )

@@ -725,8 +725,8 @@ def test_cnn_backprop_matches_finite_differences():
     # analytic per-row grads summed over the batch, via the actual kernel
     import pandas as pd
 
-    kern = cnnx._epoch_kernel(*cnnx._unpack(w0))
-    out = next(kern([pd.DataFrame({"x": list(X), "y": y})]))
+    kern = cnnx._split_epoch_kernel(*cnnx._unpack(w0))
+    out = next(kern([pd.DataFrame({"x": list(X), "y": y, "t": np.ones(n)})]))
     g_analytic = np.array(out["g"].iloc[0], dtype=np.float64) / cnnx._GSCALE
 
     h = 1e-6

@@ -483,7 +483,15 @@ def test_new_topk_selections_are_take_ordered(spark, sf_dir):
     """Top-k selections over unbounded dimensions (vocabulary, heads,
     users) must compile to TakeOrderedAndProject, never a rank window
     over the whole dimension in one partition."""
-    for name in ("bm25_search", "kn_bigram_lm", "fano_burstiness"):
+    for name in (
+        "bm25_search",
+        "kn_bigram_lm",
+        "fano_burstiness",
+        "champion_list_retrieval",
+        "team_draft_interleaving",
+        "rocchio_prf",
+        "err_ranking_eval",
+    ):
         assert "TakeOrderedAndProject" in plan_of(spark, sf_dir, name), name
 
 

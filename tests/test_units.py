@@ -546,6 +546,65 @@ def test_running_sums_match_single_partition_window(spark):
     assert empty.collect() == [] and empty_sub.collect() == []
 
 
+def test_ranked_words_match_full_window(spark, tmp_path):
+    """operators.terms.ranked_words (TakeOrdered top max(ranks), then
+    row_number on that bounded frame) must equal a row_number over the
+    whole vocabulary in (c desc, word) order, and must plan its one
+    Window over a GlobalLimit."""
+    from pyspark.sql import Window
+
+    from iceberg_classifier_spark.operators.terms import ranked_words, word_tokens
+
+    def nodes(plan):
+        stack = [plan]
+        while stack:
+            node = stack.pop()
+            yield node
+            ch = node.children()
+            stack.extend(ch.apply(i) for i in range(ch.size()))
+
+    # counts a 3, zz 3, b 2, y 2, c 1, x 1: every count is tied
+    docs = spark.createDataFrame(
+        [(1, "zz a b"), (2, "a zz y"), (3, "y zz a"), (4, "b c x")],
+        "doc_id long, text string",
+    )
+    # parquet, not a local relation, so the optimizer cannot fold the
+    # frames (the empty one included) away before planning the window
+    full_path, empty_path = str(tmp_path / "docs"), str(tmp_path / "empty")
+    docs.write.parquet(full_path)
+    docs.limit(0).write.parquet(empty_path)
+    cases = [
+        (full_path, (1, 2, 3, 4)),  # ties broken by word
+        (full_path, range(1, 9)),  # every rank, more ranks than words
+        (full_path, (2, 5, 9)),  # rank 9 lies beyond the 6-word vocabulary
+        (empty_path, (3, 8)),  # empty frame
+    ]
+    for path, ranks in cases:
+        toks = word_tokens(spark.read.parquet(path), "doc_id")
+        assert toks.columns == ["doc_id", "word"]
+        got = ranked_words(toks, ranks)
+        assert got.columns == ["word", "c", "rk"]
+        whole = Window.orderBy(F.desc("c"), "word")
+        exp = (
+            toks.groupBy("word")
+            .agg(F.count(F.lit(1)).alias("c"))
+            .select("word", "c", F.row_number().over(whole).alias("rk"))
+            .where(F.col("rk").isin(*ranks))
+        )
+        assert sorted(got.collect()) == sorted(exp.collect()), list(ranks)
+        windows = [
+            n for n in nodes(got._jdf.queryExecution().optimizedPlan())
+            if n.nodeName() == "Window"
+        ]
+        assert len(windows) == 1, list(ranks)
+        assert any(n.nodeName() == "GlobalLimit" for n in nodes(windows[0]))
+
+    ties = ranked_words(word_tokens(spark.read.parquet(full_path)), (1, 2, 3, 4))
+    assert [tuple(r) for r in ties.orderBy("rk").collect()] == [
+        ("a", 3, 1), ("zz", 3, 2), ("b", 2, 3), ("y", 2, 4)
+    ]
+
+
 def test_ahash_kernel_matches_catalyst_expression(spark):
     """The Arrow numpy aHash kernel (_ahash_frame) must be bit-identical
     to the Catalyst HOF spelling it replaced (_ahash_cols) — the oracle
