@@ -19,12 +19,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from iceberg_classifier_spark.operators.timeline import (
+    at_risk,
+    delay_events,
+    delay_obs,
+)
 from iceberg_classifier_spark.plans.analytics2 import _md5_prefix_sql
 from iceberg_classifier_spark.plans.registry import query
 from iceberg_classifier_spark.sources.tables import load
 
-# Order→ship delay, right-censored at 60 days (same construction as
-# kaplan_meier_shipping so the two estimators are directly comparable).
+# Order→ship delay, right-censored at 60 days.
 _DELAY_SQL = """
   SELECT least(greatest(datediff('day', o_orderdate, l_shipdate), 0), 60)
            AS t,
@@ -74,36 +78,10 @@ def nelson_aalen_hazard(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side combine into ≤61 groups; risk sets and both curves are
     window arithmetic on the tiny summary (the aggregate-first shape).
     """
-    o = load(spark, sf_dir, "orders")
-    li = load(spark, sf_dir, "lineitem")
-    raw = F.greatest(
-        F.lit(0),
-        F.datediff(
-            F.col("l_shipdate").cast("date"), F.col("o_orderdate").cast("date")
-        ),
-    )
-    obs = li.join(o, li.l_orderkey == o.o_orderkey).select(
-        F.least(raw, F.lit(60)).alias("t"),
-        (raw < 60).cast("bigint").alias("ev"),
-    )
-    byt = obs.groupBy("t").agg(
-        F.sum("ev").alias("d"),
-        (F.count(F.lit(1)) - F.sum("ev")).alias("c"),
+    risk = delay_events(spark, sf_dir).select(
+        "t", "d", at_risk(F.col("d") + F.col("c")).alias("n_risk")
     )
     wt = Window.orderBy("t")
-    risk = byt.select(
-        "t",
-        "d",
-        (
-            F.sum(F.col("d") + F.col("c")).over(Window.partitionBy())
-            - F.coalesce(
-                F.sum(F.col("d") + F.col("c")).over(
-                    wt.rowsBetween(Window.unboundedPreceding, -1)
-                ),
-                F.lit(0),
-            )
-        ).alias("n_risk"),
-    )
     h_term = F.col("d") * 1.0 / F.col("n_risk")
     v_term = F.col("d") * 1.0 / (F.col("n_risk") * F.col("n_risk").cast("double"))
     return risk.select(
@@ -178,35 +156,16 @@ def logrank_ship_delay(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale or a co-partitioned shuffle at fact scale); everything after
     is ≤61-row window arithmetic.
     """
-    o = load(spark, sf_dir, "orders")
-    li = load(spark, sf_dir, "lineitem")
-    raw = F.greatest(
-        F.lit(0),
-        F.datediff(
-            F.col("l_shipdate").cast("date"), F.col("o_orderdate").cast("date")
-        ),
-    )
-    obs = li.join(o, li.l_orderkey == o.o_orderkey).select(
-        F.least(raw, F.lit(60)).alias("t"),
+    obs = delay_obs(
+        spark,
+        sf_dir,
         (F.col("o_orderpriority") == "1-URGENT").cast("bigint").alias("g"),
     )
     byt = obs.groupBy("t").agg(
         F.count(F.lit(1)).alias("d"), F.sum("g").alias("d1")
     )
-    wt = Window.orderBy("t")
-    prev = wt.rowsBetween(Window.unboundedPreceding, -1)
     risk = byt.select(
-        "t",
-        "d",
-        "d1",
-        (
-            F.sum("d").over(Window.partitionBy())
-            - F.coalesce(F.sum("d").over(prev), F.lit(0))
-        ).alias("n"),
-        (
-            F.sum("d1").over(Window.partitionBy())
-            - F.coalesce(F.sum("d1").over(prev), F.lit(0))
-        ).alias("n1"),
+        "t", "d", "d1", at_risk("d").alias("n"), at_risk("d1").alias("n1")
     )
     frac = F.col("n1") * 1.0 / F.col("n")
     terms = risk.agg(

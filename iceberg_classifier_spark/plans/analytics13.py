@@ -16,21 +16,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from iceberg_classifier_spark.operators.timeline import DELAY_SQL, ship_delay
 from iceberg_classifier_spark.plans.registry import query
 from iceberg_classifier_spark.sources.tables import load
-
-_DELAY = "least(greatest(datediff('day', o_orderdate, l_shipdate), 0), 60)"
-_DELAY_SPARK = (
-    "least(greatest(datediff(CAST(l_shipdate AS DATE),"
-    " CAST(o_orderdate AS DATE)), 0), 60)"
-)
 
 
 @query(
     "kruskal_wallis_priority",
     oracle=f"""
     WITH obs AS (
-      SELECT o_orderpriority AS g, {_DELAY} AS t
+      SELECT o_orderpriority AS g, {DELAY_SQL} AS t
       FROM lineitem JOIN orders ON l_orderkey = o_orderkey
     ), hist AS (
       SELECT g, t, CAST(count(*) AS BIGINT) AS c FROM obs GROUP BY g, t
@@ -93,7 +88,7 @@ def kruskal_wallis_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load(spark, sf_dir, "lineitem")
     obs = li.join(o, li.l_orderkey == o.o_orderkey).select(
         F.col("o_orderpriority").alias("g"),
-        F.expr(_DELAY_SPARK).alias("t"),
+        ship_delay().alias("t"),
     )
     hist = obs.groupBy("g", "t").agg(F.count(F.lit(1)).alias("c"))
     byval = hist.groupBy("t").agg(F.sum("c").alias("ct"))
@@ -156,7 +151,7 @@ def kruskal_wallis_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH obs AS (
       SELECT CASE WHEN o.o_orderpriority = '1-URGENT' THEN 1 ELSE 0 END
                AS tr,
-             {_DELAY} AS y,
+             {DELAY_SQL} AS y,
              c.c_mktsegment AS seg,
              CAST(extract(month FROM CAST(o.o_orderdate AS DATE))
                AS BIGINT) AS mon
@@ -230,7 +225,7 @@ def ipw_ate_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("o_orderpriority") == "1-URGENT")
             .cast("bigint")
             .alias("tr"),
-            F.expr(_DELAY_SPARK).alias("y"),
+            ship_delay().alias("y"),
             F.col("c_mktsegment").alias("seg"),
             F.month(F.col("o_orderdate").cast("date"))
             .cast("bigint")

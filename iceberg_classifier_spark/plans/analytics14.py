@@ -15,6 +15,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from iceberg_classifier_spark.operators.timeline import (
+    at_risk,
+    delay_events,
+    km_survival,
+)
 from iceberg_classifier_spark.plans.registry import query
 from iceberg_classifier_spark.sources.tables import load
 
@@ -275,46 +280,13 @@ def rmst_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: identical to KM — one map-side-combined groupBy(delay-day),
     then ≤61-row window arithmetic.
     """
-    o = load(spark, sf_dir, "orders")
-    li = load(spark, sf_dir, "lineitem")
-    raw = F.greatest(
-        F.lit(0),
-        F.datediff(
-            F.col("l_shipdate").cast("date"), F.col("o_orderdate").cast("date")
-        ),
+    risk = delay_events(spark, sf_dir).select(
+        "t", "d", at_risk(F.col("d") + F.col("c")).alias("n_risk")
     )
-    obs = li.join(o, li.l_orderkey == o.o_orderkey).select(
-        F.least(raw, F.lit(60)).alias("t"),
-        (raw < 60).cast("bigint").alias("ev"),
-    )
-    byt = obs.groupBy("t").agg(
-        F.sum("ev").alias("d"),
-        (F.count(F.lit(1)) - F.sum("ev")).alias("c"),
-    )
-    wt = Window.orderBy("t")
-    risk = byt.select(
-        "t",
-        "d",
-        (
-            F.sum(F.col("d") + F.col("c")).over(Window.partitionBy())
-            - F.coalesce(
-                F.sum(F.col("d") + F.col("c")).over(
-                    wt.rowsBetween(Window.unboundedPreceding, -1)
-                ),
-                F.lit(0),
-            )
-        ).alias("n_risk"),
-    )
-    dead = F.max((F.col("d") == F.col("n_risk")).cast("int")).over(wt)
-    logsum = F.sum(
-        F.when(F.col("d") == F.col("n_risk"), F.lit(0.0)).otherwise(
-            F.log(1 - F.col("d") * 1.0 / F.col("n_risk"))
-        )
-    ).over(wt)
     surv = risk.select(
         "t",
-        F.when(dead == 1, F.lit(0.0)).otherwise(F.exp(logsum)).alias("s_t"),
-        F.lead("t").over(wt).alias("t_next"),
+        km_survival().alias("s_t"),
+        F.lead("t").over(Window.orderBy("t")).alias("t_next"),
     )
 
     def rmst(tau: int) -> F.Column:

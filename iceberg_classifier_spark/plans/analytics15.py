@@ -14,14 +14,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from iceberg_classifier_spark.operators.timeline import DELAY_SQL, ship_delay
 from iceberg_classifier_spark.plans.registry import query
 from iceberg_classifier_spark.sources.tables import load
 
-_DELAY = "least(greatest(datediff('day', o_orderdate, l_shipdate), 0), 60)"
-_DELAY_SPARK = (
-    "least(greatest(datediff(CAST(l_shipdate AS DATE),"
-    " CAST(o_orderdate AS DATE)), 0), 60)"
-)
 # F(4, ∞) 95% critical value = χ²₄(0.95)/4
 _F_CRIT = 2.371945
 
@@ -30,7 +26,7 @@ _F_CRIT = 2.371945
     "anova_oneway_priority",
     oracle=f"""
     WITH obs AS (
-      SELECT o_orderpriority AS g, {_DELAY} AS y
+      SELECT o_orderpriority AS g, {DELAY_SQL} AS y
       FROM lineitem JOIN orders ON l_orderkey = o_orderkey
     ), grp AS (
       SELECT g, CAST(count(*) AS BIGINT) AS n,
@@ -79,7 +75,7 @@ def anova_oneway_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load(spark, sf_dir, "lineitem")
     obs = li.join(o, li.l_orderkey == o.o_orderkey).select(
         F.col("o_orderpriority").alias("g"),
-        F.expr(_DELAY_SPARK).alias("y"),
+        ship_delay().alias("y"),
     )
     grp = obs.groupBy("g").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
@@ -120,7 +116,7 @@ def anova_oneway_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     "brown_forsythe_test",
     oracle=f"""
     WITH obs AS (
-      SELECT o_orderpriority AS g, {_DELAY} AS y
+      SELECT o_orderpriority AS g, {DELAY_SQL} AS y
       FROM lineitem JOIN orders ON l_orderkey = o_orderkey
     ), hist AS (
       SELECT g, y, CAST(count(*) AS BIGINT) AS c FROM obs GROUP BY g, y
@@ -180,7 +176,7 @@ def brown_forsythe_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load(spark, sf_dir, "lineitem")
     obs = li.join(o, li.l_orderkey == o.o_orderkey).select(
         F.col("o_orderpriority").alias("g"),
-        F.expr(_DELAY_SPARK).alias("y"),
+        ship_delay().alias("y"),
     )
     hist = obs.groupBy("g", "y").agg(F.count(F.lit(1)).alias("c"))
     wg = Window.partitionBy("g").orderBy("y")

@@ -16,14 +16,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from iceberg_classifier_spark.operators.timeline import (
+    DELAY_SQL,
+    HORIZON,
+    at_risk,
+    delay_obs,
+    raw_delay,
+    ship_delay,
+)
 from iceberg_classifier_spark.plans.registry import query
 from iceberg_classifier_spark.sources.tables import load
-
-_DELAY = "least(greatest(datediff('day', o_orderdate, l_shipdate), 0), 60)"
-_DELAY_SPARK = (
-    "least(greatest(datediff(CAST(l_shipdate AS DATE),"
-    " CAST(o_orderdate AS DATE)), 0), 60)"
-)
 
 
 @query(
@@ -33,7 +35,7 @@ _DELAY_SPARK = (
       SELECT o_custkey AS grp,
              CASE WHEN o_orderpriority = '1-URGENT' THEN 1 ELSE 0 END
                AS x,
-             {_DELAY} AS y
+             {DELAY_SQL} AS y
       FROM lineitem JOIN orders ON l_orderkey = o_orderkey
     ), g AS (
       SELECT grp, CAST(count(*) AS BIGINT) AS n,
@@ -90,7 +92,7 @@ def fixed_effects_within(spark: SparkSession, sf_dir: str) -> DataFrame:
     obs = li.join(o, li.l_orderkey == o.o_orderkey).select(
         F.col("o_custkey").alias("grp"),
         (F.col("o_orderpriority") == "1-URGENT").cast("bigint").alias("x"),
-        F.expr(_DELAY_SPARK).cast("bigint").alias("y"),
+        ship_delay().cast("bigint").alias("y"),
     )
     g = obs.groupBy("grp").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
@@ -134,7 +136,7 @@ def fixed_effects_within(spark: SparkSession, sf_dir: str) -> DataFrame:
     "competing_risks_cif",
     oracle=f"""
     WITH obs AS (
-      SELECT {_DELAY} AS t,
+      SELECT {DELAY_SQL} AS t,
              CASE WHEN greatest(datediff('day', o_orderdate, l_shipdate),
                                 0) >= 60 THEN 0
                   WHEN l_returnflag = 'R' THEN 1 ELSE 2 END AS ev
@@ -191,17 +193,10 @@ def competing_risks_cif(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one map-side-combined groupBy(delay-day); all estimator
     arithmetic on the bounded day frame.
     """
-    o = load(spark, sf_dir, "orders")
-    li = load(spark, sf_dir, "lineitem")
-    raw = F.greatest(
-        F.lit(0),
-        F.datediff(
-            F.col("l_shipdate").cast("date"), F.col("o_orderdate").cast("date")
-        ),
-    )
-    obs = li.join(o, li.l_orderkey == o.o_orderkey).select(
-        F.least(raw, F.lit(60)).alias("t"),
-        F.when(raw >= 60, 0)
+    obs = delay_obs(
+        spark,
+        sf_dir,
+        F.when(raw_delay() >= HORIZON, 0)
         .when(F.col("l_returnflag") == "R", 1)
         .otherwise(2)
         .alias("ev"),
@@ -221,15 +216,7 @@ def competing_risks_cif(spark: SparkSession, sf_dir: str) -> DataFrame:
         "d1",
         "d2",
         (F.col("d1") + F.col("d2")).alias("d"),
-        (
-            F.sum("all_c").over(Window.partitionBy())
-            - F.coalesce(
-                F.sum("all_c").over(
-                    wt.rowsBetween(Window.unboundedPreceding, -1)
-                ),
-                F.lit(0),
-            )
-        ).alias("n_risk"),
+        at_risk("all_c").alias("n_risk"),
     )
     s_prev = F.coalesce(
         F.exp(

@@ -15,14 +15,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from iceberg_classifier_spark.operators.timeline import DELAY_SQL, ship_delay
 from iceberg_classifier_spark.plans.registry import query
 from iceberg_classifier_spark.sources.tables import load
-
-_DELAY = "least(greatest(datediff('day', o_orderdate, l_shipdate), 0), 60)"
-_DELAY_SPARK = (
-    "least(greatest(datediff(CAST(l_shipdate AS DATE),"
-    " CAST(o_orderdate AS DATE)), 0), 60)"
-)
 
 
 @query(
@@ -31,7 +26,7 @@ _DELAY_SPARK = (
     WITH obs AS (
       SELECT CASE WHEN o_orderpriority = '1-URGENT' THEN 1 ELSE 0 END
                AS x,
-             {_DELAY} AS m,
+             {DELAY_SQL} AS m,
              CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END AS y
       FROM lineitem JOIN orders ON l_orderkey = o_orderkey
     ), s AS (
@@ -94,7 +89,7 @@ def mediation_product_coeffs(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load(spark, sf_dir, "lineitem")
     obs = li.join(o, li.l_orderkey == o.o_orderkey).select(
         (F.col("o_orderpriority") == "1-URGENT").cast("bigint").alias("x"),
-        F.expr(_DELAY_SPARK).cast("bigint").alias("m"),
+        ship_delay().cast("bigint").alias("m"),
         (F.col("l_returnflag") == "R").cast("bigint").alias("y"),
     )
     s = obs.agg(

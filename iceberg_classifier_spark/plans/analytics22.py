@@ -15,14 +15,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from iceberg_classifier_spark.operators.timeline import DELAY_SQL, delay_obs
 from iceberg_classifier_spark.plans.registry import query
 from iceberg_classifier_spark.sources.tables import load
 
-_DELAY = "least(greatest(datediff('day', o_orderdate, l_shipdate), 0), 60)"
-_DELAY_SPARK = (
-    "least(greatest(datediff(CAST(l_shipdate AS DATE),"
-    " CAST(o_orderdate AS DATE)), 0), 60)"
-)
 _SQRT_2PI = 2.5066282746310002
 
 
@@ -30,7 +26,7 @@ _SQRT_2PI = 2.5066282746310002
     "kde_density_curve",
     oracle=f"""
     WITH obs AS (
-      SELECT {_DELAY} AS t
+      SELECT {DELAY_SQL} AS t
       FROM lineitem JOIN orders ON l_orderkey = o_orderkey
     ), hist AS (
       SELECT t, CAST(count(*) AS BIGINT) AS c FROM obs GROUP BY t
@@ -75,11 +71,7 @@ def kde_density_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     the convolution is levels × grid bounded arithmetic (for
     continuous data, quantize to ~1e4 micro-bins first — same shape).
     """
-    o = load(spark, sf_dir, "orders")
-    li = load(spark, sf_dir, "lineitem")
-    obs = li.join(o, li.l_orderkey == o.o_orderkey).select(
-        F.expr(_DELAY_SPARK).alias("t")
-    )
+    obs = delay_obs(spark, sf_dir)
     hist = obs.groupBy("t").agg(F.count(F.lit(1)).cast("bigint").alias("c"))
     mom = hist.agg(
         F.sum("c").cast("bigint").alias("n"),
@@ -127,7 +119,7 @@ def kde_density_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     "jarque_bera_test",
     oracle=f"""
     WITH obs AS (
-      SELECT {_DELAY} AS t
+      SELECT {DELAY_SQL} AS t
       FROM lineitem JOIN orders ON l_orderkey = o_orderkey
     ), hist AS (
       SELECT t, CAST(count(*) AS BIGINT) AS c FROM obs GROUP BY t
@@ -189,11 +181,7 @@ def jarque_bera_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one map-side-combined groupBy(value); moments from the
     ≤61-row histogram.
     """
-    o = load(spark, sf_dir, "orders")
-    li = load(spark, sf_dir, "lineitem")
-    obs = li.join(o, li.l_orderkey == o.o_orderkey).select(
-        F.expr(_DELAY_SPARK).alias("t")
-    )
+    obs = delay_obs(spark, sf_dir)
     hist = obs.groupBy("t").agg(F.count(F.lit(1)).cast("bigint").alias("c"))
     mom = hist.agg(
         F.sum("c").cast("bigint").alias("n"),

@@ -16,21 +16,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from iceberg_classifier_spark.operators.timeline import DELAY_SQL, delay_obs, ship_delay
 from iceberg_classifier_spark.plans.registry import query
 from iceberg_classifier_spark.sources.tables import load
-
-_DELAY = "least(greatest(datediff('day', o_orderdate, l_shipdate), 0), 60)"
-_DELAY_SPARK = (
-    "least(greatest(datediff(CAST(l_shipdate AS DATE),"
-    " CAST(o_orderdate AS DATE)), 0), 60)"
-)
 
 
 @query(
     "hodges_lehmann_location",
     oracle=f"""
     WITH obs AS (
-      SELECT {_DELAY} AS t
+      SELECT {DELAY_SQL} AS t
       FROM lineitem JOIN orders ON l_orderkey = o_orderkey
     ), hist AS (
       SELECT t, CAST(count(*) AS BIGINT) AS c FROM obs GROUP BY t
@@ -72,11 +67,7 @@ def hodges_lehmann_location(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded 61² cells regardless of n; the fact table is touched once
     by the histogram groupBy.
     """
-    o = load(spark, sf_dir, "orders")
-    li = load(spark, sf_dir, "lineitem")
-    obs = li.join(o, li.l_orderkey == o.o_orderkey).select(
-        F.expr(_DELAY_SPARK).alias("t")
-    )
+    obs = delay_obs(spark, sf_dir)
     hist = obs.groupBy("t").agg(F.count(F.lit(1)).cast("bigint").alias("c"))
     a = hist.alias("a")
     b = hist.alias("b")
@@ -129,7 +120,7 @@ def hodges_lehmann_location(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH ranked_orders AS (
       SELECT o.o_custkey AS cust, o.o_orderkey,
-             {_DELAY} AS t,
+             {DELAY_SQL} AS t,
              row_number() OVER (PARTITION BY o.o_custkey
                ORDER BY o.o_orderdate, o.o_orderkey,
                         l.l_linenumber, l.l_shipdate) AS rf,
@@ -203,7 +194,7 @@ def wilcoxon_signed_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderdate",
         "l_linenumber",
         "l_shipdate",
-        F.expr(_DELAY_SPARK).alias("t"),
+        ship_delay().alias("t"),
     )
     # l_shipdate completes the tiebreak: the synthetic lineitem carries
     # duplicate (orderkey, linenumber) rows with different shipdates, and

@@ -15,14 +15,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from iceberg_classifier_spark.operators.timeline import DELAY_SQL, ship_delay
 from iceberg_classifier_spark.plans.registry import query
 from iceberg_classifier_spark.sources.tables import load
 
-_DELAY = "least(greatest(datediff('day', o_orderdate, l_shipdate), 0), 60)"
-_DELAY_SPARK = (
-    "least(greatest(datediff(CAST(l_shipdate AS DATE),"
-    " CAST(o_orderdate AS DATE)), 0), 60)"
-)
 _TOST_MARGIN = 0.5  # equivalence margin (days)
 _Z05 = 1.644854  # one-sided 5%
 
@@ -31,7 +27,7 @@ _Z05 = 1.644854  # one-sided 5%
     "tost_equivalence_test",
     oracle=f"""
     WITH obs AS (
-      SELECT CAST(o_orderkey % 2 AS BIGINT) AS arm, {_DELAY} AS y
+      SELECT CAST(o_orderkey % 2 AS BIGINT) AS arm, {DELAY_SQL} AS y
       FROM lineitem JOIN orders ON l_orderkey = o_orderkey
     ), g AS (
       SELECT arm, CAST(count(*) AS BIGINT) AS n,
@@ -87,7 +83,7 @@ def tost_equivalence_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load(spark, sf_dir, "lineitem")
     obs = li.join(o, li.l_orderkey == o.o_orderkey).select(
         (F.col("o_orderkey") % 2).cast("bigint").alias("arm"),
-        F.expr(_DELAY_SPARK).alias("y"),
+        ship_delay().alias("y"),
     )
     g = obs.groupBy("arm").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
@@ -138,7 +134,7 @@ def tost_equivalence_test(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT c.c_mktsegment AS seg,
              CASE WHEN o.o_orderpriority = '1-URGENT' THEN 1 ELSE 0 END
                AS tr,
-             {_DELAY} AS y
+             {DELAY_SQL} AS y
       FROM lineitem l
       JOIN orders o ON l.l_orderkey = o.o_orderkey
       JOIN customer c ON o.o_custkey = c.c_custkey
@@ -228,7 +224,7 @@ def meta_analysis_dl(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("o_orderpriority") == "1-URGENT")
             .cast("bigint")
             .alias("tr"),
-            F.expr(_DELAY_SPARK).alias("y"),
+            ship_delay().alias("y"),
         )
     )
     g = obs.groupBy("seg", "tr").agg(
@@ -320,7 +316,7 @@ def meta_analysis_dl(spark: SparkSession, sf_dir: str) -> DataFrame:
     "intraclass_correlation",
     oracle=f"""
     WITH obs AS (
-      SELECT o_custkey AS grp, {_DELAY} AS y
+      SELECT o_custkey AS grp, {DELAY_SQL} AS y
       FROM lineitem JOIN orders ON l_orderkey = o_orderkey
     ), g AS (
       SELECT grp, CAST(count(*) AS BIGINT) AS n,
@@ -376,7 +372,7 @@ def intraclass_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load(spark, sf_dir, "lineitem")
     obs = li.join(o, li.l_orderkey == o.o_orderkey).select(
         F.col("o_custkey").alias("grp"),
-        F.expr(_DELAY_SPARK).cast("bigint").alias("y"),
+        ship_delay().cast("bigint").alias("y"),
     )
     g = obs.groupBy("grp").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),

@@ -15,14 +15,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from iceberg_classifier_spark.operators.timeline import DELAY_SQL, delay_obs, ship_delay
 from iceberg_classifier_spark.plans.registry import query
 from iceberg_classifier_spark.sources.tables import load
 
-_DELAY = "least(greatest(datediff('day', o_orderdate, l_shipdate), 0), 60)"
-_DELAY_SPARK = (
-    "least(greatest(datediff(CAST(l_shipdate AS DATE),"
-    " CAST(o_orderdate AS DATE)), 0), 60)"
-)
 _LN_2PI = 1.8378770664093453
 
 
@@ -30,7 +26,7 @@ _LN_2PI = 1.8378770664093453
     "distribution_fit_selection",
     oracle=f"""
     WITH obs AS (
-      SELECT {_DELAY} + 1 AS t
+      SELECT {DELAY_SQL} + 1 AS t
       FROM lineitem JOIN orders ON l_orderkey = o_orderkey
     ), hist AS (
       SELECT t, CAST(count(*) AS BIGINT) AS c FROM obs GROUP BY t
@@ -107,7 +103,7 @@ def distribution_fit_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load(spark, sf_dir, "orders")
     li = load(spark, sf_dir, "lineitem")
     obs = li.join(o, li.l_orderkey == o.o_orderkey).select(
-        (F.expr(_DELAY_SPARK) + 1).alias("t")
+        (ship_delay() + 1).alias("t")
     )
     hist = obs.groupBy("t").agg(F.count(F.lit(1)).cast("bigint").alias("c"))
 
@@ -291,7 +287,7 @@ def _gmm_oracle(iters: int) -> str:
     # and DuckDB never re-inlines it (the BPE-chain lesson).
     parts = [f"""
     WITH obs AS (
-      SELECT {_DELAY} AS t
+      SELECT {DELAY_SQL} AS t
       FROM lineitem JOIN orders ON l_orderkey = o_orderkey
     ), hist AS (
       SELECT t, CAST(count(*) AS BIGINT) AS c FROM obs GROUP BY t
@@ -376,11 +372,7 @@ def gaussian_mixture_em(spark: SparkSession, sf_dir: str) -> DataFrame:
     all 10 iterations run on the ≤61-row histogram (for continuous
     data: micro-bin first, same shape).
     """
-    o = load(spark, sf_dir, "orders")
-    li = load(spark, sf_dir, "lineitem")
-    obs = li.join(o, li.l_orderkey == o.o_orderkey).select(
-        F.expr(_DELAY_SPARK).alias("t")
-    )
+    obs = delay_obs(spark, sf_dir)
     hist = obs.groupBy("t").agg(
         F.count(F.lit(1)).cast("bigint").alias("c")
     ).cache()

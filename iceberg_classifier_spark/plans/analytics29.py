@@ -16,14 +16,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from iceberg_classifier_spark.plans.mlprep import duck_pseudo_prob, pseudo_prob
+from iceberg_classifier_spark.operators.timeline import DELAY_SQL, ship_delay
 from iceberg_classifier_spark.plans.registry import query
 from iceberg_classifier_spark.sources.tables import load
-
-_DELAY = "least(greatest(datediff('day', o_orderdate, l_shipdate), 0), 60)"
-_DELAY_SPARK = (
-    "least(greatest(datediff(CAST(l_shipdate AS DATE),"
-    " CAST(o_orderdate AS DATE)), 0), 60)"
-)
 
 
 @query(
@@ -175,7 +170,7 @@ def pav_calibration_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH obs AS (
       SELECT CASE WHEN o_orderpriority = '1-URGENT' THEN 1 ELSE 0 END
-               AS g, {_DELAY} AS t
+               AS g, {DELAY_SQL} AS t
       FROM lineitem JOIN orders ON l_orderkey = o_orderkey
     ), hx AS (
       SELECT t, CAST(count(*) AS BIGINT) AS c FROM obs WHERE g = 1
@@ -235,7 +230,7 @@ def energy_distance_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load(spark, sf_dir, "lineitem")
     obs = li.join(o, li.l_orderkey == o.o_orderkey).select(
         (F.col("o_orderpriority") == "1-URGENT").cast("bigint").alias("g"),
-        F.expr(_DELAY_SPARK).alias("t"),
+        ship_delay().alias("t"),
     )
     hx = (
         obs.filter(F.col("g") == 1)

@@ -16,14 +16,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from iceberg_classifier_spark.operators.timeline import (
+    DELAY_SQL,
+    at_risk,
+    delay_events,
+    delay_obs,
+)
 from iceberg_classifier_spark.plans.registry import query
 from iceberg_classifier_spark.sources.tables import load
 
-_DELAY = "least(greatest(datediff('day', o_orderdate, l_shipdate), 0), 60)"
-_DELAY_SPARK = (
-    "least(greatest(datediff(CAST(l_shipdate AS DATE),"
-    " CAST(o_orderdate AS DATE)), 0), 60)"
-)
 _Z95 = 1.959964
 
 
@@ -31,7 +32,7 @@ _Z95 = 1.959964
     "km_greenwood_ci",
     oracle=f"""
     WITH obs AS (
-      SELECT {_DELAY} AS t,
+      SELECT {DELAY_SQL} AS t,
              CASE WHEN greatest(datediff('day', o_orderdate, l_shipdate),
                                 0) < 60 THEN 1 ELSE 0 END AS ev
       FROM lineitem JOIN orders ON l_orderkey = o_orderkey
@@ -82,36 +83,10 @@ def km_greenwood_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: identical to KM — one map-side-combined groupBy(delay-day),
     then bounded window arithmetic.
     """
-    o = load(spark, sf_dir, "orders")
-    li = load(spark, sf_dir, "lineitem")
-    raw = F.greatest(
-        F.lit(0),
-        F.datediff(
-            F.col("l_shipdate").cast("date"), F.col("o_orderdate").cast("date")
-        ),
-    )
-    obs = li.join(o, li.l_orderkey == o.o_orderkey).select(
-        F.least(raw, F.lit(60)).alias("t"),
-        (raw < 60).cast("bigint").alias("ev"),
-    )
-    byt = obs.groupBy("t").agg(
-        F.sum("ev").alias("d"),
-        (F.count(F.lit(1)) - F.sum("ev")).alias("c"),
+    risk = delay_events(spark, sf_dir).select(
+        "t", "d", at_risk(F.col("d") + F.col("c")).alias("n_risk")
     )
     wt = Window.orderBy("t")
-    risk = byt.select(
-        "t",
-        "d",
-        (
-            F.sum(F.col("d") + F.col("c")).over(Window.partitionBy())
-            - F.coalesce(
-                F.sum(F.col("d") + F.col("c")).over(
-                    wt.rowsBetween(Window.unboundedPreceding, -1)
-                ),
-                F.lit(0),
-            )
-        ).alias("n_risk"),
-    )
     s_t = F.exp(
         F.sum(
             F.when(F.col("d") == F.col("n_risk"), None).otherwise(
@@ -275,7 +250,7 @@ def newey_west_se(spark: SparkSession, sf_dir: str) -> DataFrame:
     "histogram_binning_rules",
     oracle=f"""
     WITH obs AS (
-      SELECT {_DELAY} AS t
+      SELECT {DELAY_SQL} AS t
       FROM lineitem JOIN orders ON l_orderkey = o_orderkey
     ), hist AS (
       SELECT t, CAST(count(*) AS BIGINT) AS c FROM obs GROUP BY t
@@ -330,11 +305,7 @@ def histogram_binning_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one map-side-combined groupBy(value); rules from the
     bounded summary.
     """
-    o = load(spark, sf_dir, "orders")
-    li = load(spark, sf_dir, "lineitem")
-    obs = li.join(o, li.l_orderkey == o.o_orderkey).select(
-        F.expr(_DELAY_SPARK).alias("t")
-    )
+    obs = delay_obs(spark, sf_dir)
     hist = obs.groupBy("t").agg(F.count(F.lit(1)).cast("bigint").alias("c"))
     wt = Window.orderBy("t")
     cum = hist.select(

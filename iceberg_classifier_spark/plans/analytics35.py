@@ -38,6 +38,7 @@ from iceberg_classifier_spark.operators.terms import (
     ranked_words,
     word_tokens,
 )
+from iceberg_classifier_spark.operators.timeline import order_day
 from iceberg_classifier_spark.plans.registry import query
 from iceberg_classifier_spark.sources.tables import load
 
@@ -189,11 +190,7 @@ def kendall_tau_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     deliberately bounded, never fact-sized.
     """
     o = load(spark, sf_dir, "orders")
-    daily = o.groupBy(
-        F.datediff(
-            F.col("o_orderdate").cast("date"), F.lit("1995-01-01").cast("date")
-        ).alias("d")
-    ).agg(
+    daily = o.groupBy(order_day().alias("d")).agg(
         F.count(F.lit(1)).cast("bigint").alias("x"),
         F.sum(F.round(F.col("o_totalprice")).cast("bigint"))
         .cast("bigint")
@@ -418,11 +415,7 @@ def var_cvar_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixed date range — documented single-partition window).
     """
     o = load(spark, sf_dir, "orders")
-    daily = o.groupBy(
-        F.datediff(
-            F.col("o_orderdate").cast("date"), F.lit("1995-01-01").cast("date")
-        ).alias("d")
-    ).agg(
+    daily = o.groupBy(order_day().alias("d")).agg(
         F.expr(
             "CAST(round(CAST(sum(CAST(round(o_totalprice) AS BIGINT))"
             " AS DOUBLE) / 1000.0) AS BIGINT)"

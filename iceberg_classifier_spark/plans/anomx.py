@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from iceberg_classifier_spark.operators.timeline import order_day
 from iceberg_classifier_spark.plans.registry import query
 from iceberg_classifier_spark.plans.privstat import _acklam_inv_norm
 from iceberg_classifier_spark.sources.tables import load
@@ -145,11 +146,7 @@ def seasonal_hybrid_esd(spark: SparkSession, sf_dir: str) -> DataFrame:
     iterative pattern).
     """
     o = load(spark, sf_dir, "orders")
-    daily = o.groupBy(
-        F.datediff(
-            F.col("o_orderdate").cast("date"), F.lit("1995-01-01").cast("date")
-        ).alias("d")
-    ).agg(
+    daily = o.groupBy(order_day().alias("d")).agg(
         F.sum(F.round(F.col("o_totalprice")).cast("bigint"))
         .cast("bigint")
         .alias("y")
@@ -302,18 +299,7 @@ def circular_stats_dow(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side combinable end to end.
     """
     o = load(spark, sf_dir, "orders")
-    theta = (
-        (
-            F.datediff(
-                F.col("o_orderdate").cast("date"),
-                F.lit("1995-01-01").cast("date"),
-            )
-            % 7
-        )
-        * 2.0
-        * 3.141592653589793
-        / 7.0
-    )
+    theta = (order_day() % 7) * 2.0 * 3.141592653589793 / 7.0
     mom = o.select(theta.alias("theta")).agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.sum(F.cos("theta")).alias("c"),

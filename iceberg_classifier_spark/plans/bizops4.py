@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from iceberg_classifier_spark.operators.timeline import order_day
 from iceberg_classifier_spark.plans.registry import query
 from iceberg_classifier_spark.sources.tables import load
 
@@ -222,15 +223,7 @@ def abc_xyz_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(o, li.l_orderkey == o.o_orderkey)
         .groupBy(
             F.col("p_brand").alias("brand"),
-            F.floor(
-                F.datediff(
-                    F.col("o_orderdate").cast("date"),
-                    F.lit("1995-01-01").cast("date"),
-                )
-                / 7
-            )
-            .cast("bigint")
-            .alias("week"),
+            F.floor(order_day() / 7).cast("bigint").alias("week"),
         )
         .agg(F.sum(F.round("l_quantity")).cast("bigint").alias("qty"))
     )

@@ -37,6 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from iceberg_classifier_spark.operators.timeline import order_day
 from iceberg_classifier_spark.plans.registry import query
 from iceberg_classifier_spark.sources.tables import load
 
@@ -281,12 +282,7 @@ def chow_break_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     o = load(spark, sf_dir, "orders")
     daily = (
-        o.groupBy(
-            F.datediff(
-                F.col("o_orderdate").cast("date"),
-                F.lit("1995-01-01").cast("date"),
-            ).alias("d")
-        )
+        o.groupBy(order_day().alias("d"))
         .agg(
             F.expr(
                 "CAST(round(CAST(sum(CAST(round(o_totalprice) AS BIGINT))"
@@ -400,11 +396,7 @@ def granger_causality_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     and moment aggregate run on <=2.4k rows.
     """
     o = load(spark, sf_dir, "orders")
-    daily = o.groupBy(
-        F.datediff(
-            F.col("o_orderdate").cast("date"), F.lit("1995-01-01").cast("date")
-        ).alias("d")
-    ).agg(
+    daily = o.groupBy(order_day().alias("d")).agg(
         F.count(F.lit(1)).cast("bigint").alias("cnt"),
         F.expr(
             "CAST(round(CAST(sum(CAST(round(o_totalprice) AS BIGINT))"

@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from iceberg_classifier_spark.operators.timeline import order_day
 from iceberg_classifier_spark.plans.registry import query
 from iceberg_classifier_spark.sources.tables import load
 
@@ -103,11 +104,7 @@ def engle_granger_cointegration(
     single aggregations over <=2.4k rows.
     """
     o = load(spark, sf_dir, "orders")
-    daily = o.groupBy(
-        F.datediff(
-            F.col("o_orderdate").cast("date"), F.lit("1995-01-01").cast("date")
-        ).alias("d")
-    ).agg(
+    daily = o.groupBy(order_day().alias("d")).agg(
         F.count(F.lit(1)).cast("bigint").alias("x"),
         F.expr(
             "CAST(round(CAST(sum(CAST(round(o_totalprice) AS BIGINT))"
@@ -482,11 +479,7 @@ def tail_dependence_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     tail counting run on <=2.4k rows (documented bounded window).
     """
     o = load(spark, sf_dir, "orders")
-    daily = o.groupBy(
-        F.datediff(
-            F.col("o_orderdate").cast("date"), F.lit("1995-01-01").cast("date")
-        ).alias("d")
-    ).agg(
+    daily = o.groupBy(order_day().alias("d")).agg(
         F.count(F.lit(1)).cast("bigint").alias("x"),
         F.sum(F.round(F.col("o_totalprice")).cast("bigint"))
         .cast("bigint")

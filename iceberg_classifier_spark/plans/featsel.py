@@ -31,6 +31,7 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from iceberg_classifier_spark.operators.timeline import order_day
 from iceberg_classifier_spark.plans.registry import query
 from iceberg_classifier_spark.sources.tables import load
 
@@ -366,11 +367,7 @@ def sax_daily_motifs(spark: SparkSession, sf_dir: str) -> DataFrame:
     tiny group-by.
     """
     o = load(spark, sf_dir, "orders")
-    daily = o.groupBy(
-        F.datediff(
-            F.col("o_orderdate").cast("date"), F.lit("1995-01-01").cast("date")
-        ).alias("d")
-    ).agg(
+    daily = o.groupBy(order_day().alias("d")).agg(
         F.sum(F.round(F.col("o_totalprice")).cast("bigint"))
         .cast("bigint")
         .alias("y")

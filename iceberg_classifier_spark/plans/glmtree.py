@@ -40,6 +40,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from iceberg_classifier_spark.operators.timeline import order_day
 from iceberg_classifier_spark.plans.registry import query
 from iceberg_classifier_spark.sources.tables import load
 
@@ -125,11 +126,7 @@ def poisson_irls_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     o = load(spark, sf_dir, "orders")
     hist = (
-        o.groupBy(
-            F.datediff(
-                F.col("o_orderdate").cast("date"), F.lit("1995-01-01").cast("date")
-            ).alias("d")
-        )
+        o.groupBy(order_day().alias("d"))
         .agg(F.count(F.lit(1)).cast("bigint").alias("y"))
         .cache()
     )

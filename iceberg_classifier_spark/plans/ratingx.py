@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from iceberg_classifier_spark.operators.timeline import order_day
 from iceberg_classifier_spark.plans.registry import query
 from iceberg_classifier_spark.sources.tables import load
 
@@ -130,9 +131,7 @@ def elo_rating_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     o = load(spark, sf_dir, "orders")
     cell = o.groupBy(
-        F.datediff(
-            F.col("o_orderdate").cast("date"), F.lit("1995-01-01").cast("date")
-        ).alias("d"),
+        order_day().alias("d"),
         F.col("o_orderpriority").alias("pri"),
     ).agg(
         F.sum(F.round(F.col("o_totalprice")).cast("bigint"))

@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from iceberg_classifier_spark.operators.timeline import order_day
 from iceberg_classifier_spark.plans.registry import query
 from iceberg_classifier_spark.plans.privstat import _acklam_inv_norm
 from iceberg_classifier_spark.sources.tables import load, parquet_column_bounds
@@ -384,11 +385,7 @@ def grubbs_outlier_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     TakeOrdered over <=2.4k rows.
     """
     o = load(spark, sf_dir, "orders")
-    daily = o.groupBy(
-        F.datediff(
-            F.col("o_orderdate").cast("date"), F.lit("1995-01-01").cast("date")
-        ).alias("d")
-    ).agg(
+    daily = o.groupBy(order_day().alias("d")).agg(
         F.sum(F.round(F.col("o_totalprice")).cast("bigint"))
         .cast("bigint")
         .alias("y")

@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from iceberg_classifier_spark.operators.timeline import order_day
 from iceberg_classifier_spark.plans.registry import query
 from iceberg_classifier_spark.sources.tables import load
 
@@ -92,11 +93,7 @@ def nadaraya_watson_regression(
     combining map-side to {_NW_GRID} grid rows.
     """
     o = load(spark, sf_dir, "orders")
-    daily = o.groupBy(
-        F.datediff(
-            F.col("o_orderdate").cast("date"), F.lit("1995-01-01").cast("date")
-        ).alias("d")
-    ).agg(
+    daily = o.groupBy(order_day().alias("d")).agg(
         F.count(F.lit(1)).cast("bigint").alias("x"),
         F.expr(
             "CAST(round(CAST(sum(CAST(round(o_totalprice) AS BIGINT))"

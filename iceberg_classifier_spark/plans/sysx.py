@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from iceberg_classifier_spark.operators.timeline import order_day
 from iceberg_classifier_spark.plans.registry import query
 from iceberg_classifier_spark.sources.tables import load
 
@@ -189,11 +190,7 @@ def periodogram_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     combining map-side to {_PG_KMAX} power rows.
     """
     o = load(spark, sf_dir, "orders")
-    daily = o.groupBy(
-        F.datediff(
-            F.col("o_orderdate").cast("date"), F.lit("1995-01-01").cast("date")
-        ).alias("d")
-    ).agg(
+    daily = o.groupBy(order_day().alias("d")).agg(
         F.sum(F.round(F.col("o_totalprice")).cast("bigint"))
         .cast("bigint")
         .alias("y")
@@ -322,11 +319,7 @@ def ffd_bin_packing_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     compaction planner packs per partition, not globally.
     """
     o = load(spark, sf_dir, "orders")
-    daily = o.groupBy(
-        F.datediff(
-            F.col("o_orderdate").cast("date"), F.lit("1995-01-01").cast("date")
-        ).alias("d")
-    ).agg(
+    daily = o.groupBy(order_day().alias("d")).agg(
         F.expr(
             "CAST(round(CAST(sum(CAST(round(o_totalprice) AS BIGINT))"
             " AS DOUBLE) / 1000.0) AS BIGINT)"

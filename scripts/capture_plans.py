@@ -4,7 +4,12 @@ plans/$SPARK_GRAFT_PLANS_ROUND/ (default r10), and print a sha256 digest
 of each plan's skeleton: the operator tree (the formatted explain up to its
 first blank line) with expression IDs (#123) and bracketed attribute lists
 removed, so a rename or fresh expression IDs do not hide whether the plan
-changed. An existing capture file is never overwritten: the script exits
+changed. Next to it, a plan digest covers the whole formatted explain with
+only the three tokens that vary between two builds of one commit
+normalized: expression IDs (#123), plan_id=N, and checkpoint RDD ids with
+their call sites (MapPartitionsRDD[N] at ... :N). Equal plan digests
+certify a refactor that leaves every node, expression and attribute as it
+was. An existing capture file is never overwritten: the script exits
 non-zero naming it, before any plan is built.
 
 Usage: python scripts/capture_plans.py before|after [name ...]
@@ -19,6 +24,12 @@ def skeleton_digest(plan: str) -> str:
     tree = plan.split("\n\n", 1)[0]
     tree = re.sub(r"\[[^\]]*\]", "", re.sub(r"#\d+", "", tree))
     return hashlib.sha256(tree.encode()).hexdigest()
+
+def plan_digest(plan: str) -> str:
+    plan = re.sub(r"#\d+", "#", plan)
+    plan = re.sub(r"plan_id=\d+", "plan_id=", plan)
+    plan = re.sub(r"MapPartitionsRDD\[\d+\] at [^,\]]*?:\d+", "MapPartitionsRDD", plan)
+    return hashlib.sha256(plan.encode()).hexdigest()
 
 def main():
     if len(sys.argv) < 2 or sys.argv[1] not in ("before", "after"):
@@ -49,7 +60,7 @@ def main():
         with open(paths[name], "w") as f:
             f.write(plan)
         spark.catalog.clearCache()
-        print(f"captured {name}_{tag}: {plan.count('Exchange')} Exchange-mentions, {len(plan)} chars, skeleton sha256 {skeleton_digest(plan)}")
+        print(f"captured {name}_{tag}: {plan.count('Exchange')} Exchange-mentions, {len(plan)} chars, skeleton sha256 {skeleton_digest(plan)}, plan sha256 {plan_digest(plan)}")
     spark.stop()
 
 if __name__ == "__main__":

@@ -6,8 +6,9 @@ and lines that start with '#' are dropped, and runs of whitespace collapse
 to one space. A window is 8 consecutive normalized lines of one file; a
 line is duplicated when it lies in a window whose text occurs at least
 twice in the package. Prints the duplicated-line total and how many of
-those lines are part of a string-literal token: oracle SQL, docstrings,
-and also code lines that hold a quoted column name.
+those lines lie inside a string literal that spans more than one row:
+oracle SQL and docstrings. A one-row literal, such as the quoted column
+name in `.groupBy("word")`, leaves its line counted as code.
 
 Usage: python scripts/clone_scan.py
 """
@@ -19,13 +20,23 @@ PKG = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), 
 
 
 def string_rows(src):
-    """Source rows that a string-literal token spans."""
-    # Python 3.12+ splits f-strings into FSTRING_START/MIDDLE/END tokens
-    kinds = {getattr(tokenize, k, tokenize.STRING) for k in ("STRING", "FSTRING_START", "FSTRING_MIDDLE", "FSTRING_END")}
-    rows = set()
+    """Source rows inside string literals that span more than one row."""
+    # Python 3.12+ splits an f-string into FSTRING_START ... FSTRING_END
+    fstart = getattr(tokenize, "FSTRING_START", None)
+    fend = getattr(tokenize, "FSTRING_END", None)
+    rows, opened = set(), []
     for tok in tokenize.generate_tokens(io.StringIO(src).readline):
-        if tok.type in kinds:
-            rows.update(range(tok.start[0], tok.end[0] + 1))
+        if tok.type == fstart:
+            opened.append(tok.start[0])
+            continue
+        if tok.type == fend:
+            first = opened.pop()
+        elif tok.type == tokenize.STRING:
+            first = tok.start[0]
+        else:
+            continue
+        if tok.end[0] > first:
+            rows.update(range(first, tok.end[0] + 1))
     return rows
 
 
@@ -49,7 +60,7 @@ def main():
             for path, k in places:
                 dup.update((path, i) for i, _ in files[path][0][k : k + WINDOW])
     in_str = sum(1 for path, i in dup if i in files[path][1])
-    print(f"duplicated lines: {len(dup)} ({in_str} in string literals, {len(dup) - in_str} other)")
+    print(f"duplicated lines: {len(dup)} ({in_str} in multi-line string literals, {len(dup) - in_str} other)")
 
 
 if __name__ == "__main__":

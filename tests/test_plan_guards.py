@@ -154,22 +154,27 @@ UNPARTITIONED_WINDOW_ALLOWLIST = {
 }
 
 
-def _unpartitioned_window_count(df) -> int:
-    plan = df._jdf.queryExecution().optimizedPlan()
-    n = 0
-    stack = [plan]
+def _unpartitioned_windows(df) -> list:
+    """The Window / WindowGroupLimit nodes of ``df``'s optimized plan
+    that have no partition spec."""
+    found = []
+    stack = [df._jdf.queryExecution().optimizedPlan()]
     while stack:
         node = stack.pop()
         if node.nodeName() in ("Window", "WindowGroupLimit"):
             try:
                 if node.partitionSpec().isEmpty():
-                    n += 1
+                    found.append(node)
             except Exception:  # noqa: BLE001 — node variant without spec
                 pass
         ch = node.children()
         for i in range(ch.size()):
             stack.append(ch.apply(i))
-    return n
+    return found
+
+
+def _unpartitioned_window_count(df) -> int:
+    return len(_unpartitioned_windows(df))
 
 
 @pytest.mark.parametrize("name", sorted(REGISTRY))

@@ -479,10 +479,23 @@ def test_modernapi2_wave_runs_clean(spark, sf_dir):
         assert "BatchEvalPython" not in p, f"{name}: row-Python UDF"
 
 
+def _window_input(node):
+    """The first node under ``node`` that is not a Project, Filter, Sort
+    or Window: what an unpartitioned window actually ranks."""
+    node = node.child()
+    while node.nodeName() in ("Project", "Filter", "Sort", "Window"):
+        node = node.child()
+    return node
+
+
 def test_new_topk_selections_are_take_ordered(spark, sf_dir):
     """Top-k selections over unbounded dimensions (vocabulary, heads,
     users) must compile to TakeOrderedAndProject, never a rank window
-    over the whole dimension in one partition."""
+    over the whole dimension in one partition: every unpartitioned
+    window of these builders ranks a GlobalLimit, so one bounded top-k
+    cannot hide a second whole-dimension rank window elsewhere."""
+    from test_plan_guards import _unpartitioned_windows
+
     for name in (
         "bm25_search",
         "kn_bigram_lm",
@@ -493,6 +506,12 @@ def test_new_topk_selections_are_take_ordered(spark, sf_dir):
         "err_ranking_eval",
     ):
         assert "TakeOrderedAndProject" in plan_of(spark, sf_dir, name), name
+        df = REGISTRY[name].fn(spark, sf_dir)
+        for w in _unpartitioned_windows(df):
+            if w.nodeName() != "Window":
+                continue
+            below = _window_input(w).nodeName()
+            assert below == "GlobalLimit", f"{name}: window over {below}"
 
 
 def test_analytics6_wave_plan_shapes(spark, sf_dir):

@@ -879,3 +879,46 @@ def test_parquet_column_bounds_nested_layout_falls_back(tmp_path):
     (table / "lang=en").mkdir()
     _write_ids(table / "lang=en" / "part-0.parquet", [1, 1 << 40])
     assert parquet_column_bounds(str(tmp_path), "documents", "doc_id") is None
+
+
+def test_at_risk_counts_unresolved_rows(spark):
+    """operators.timeline.at_risk over a (t, d, c) day table must equal,
+    per day t, the number of subject rows with t' >= t: on a day with
+    only censored rows, on a last day where every subject at risk has the
+    event (d = n), on a one-row frame and on an empty frame."""
+    from collections import Counter
+
+    from iceberg_classifier_spark.operators.timeline import at_risk
+
+    cases = {
+        # (t, event): day 2 is censored only; day 7 resolves all that is left
+        "mixed": [(0, 1), (0, 0), (2, 0), (2, 0), (5, 1), (5, 1), (5, 0),
+                  (7, 1), (7, 1)],
+        "single": [(4, 1), (4, 0), (4, 1)],
+        "empty": [],
+    }
+    for name, subjects in cases.items():
+        d, c = Counter(), Counter()
+        for t, ev in subjects:
+            (d if ev else c)[t] += 1
+        days = sorted(set(d) | set(c))
+        df = spark.createDataFrame(
+            [(t, d[t], c[t]) for t in days], "t long, d long, c long"
+        )
+        got = df.select(
+            "t",
+            "d",
+            at_risk(F.col("d") + F.col("c")).alias("n"),
+            at_risk("d").alias("n_d"),
+        ).collect()
+        assert {r.t: r.n for r in got} == {
+            t: sum(1 for u, _ in subjects if u >= t) for t in days
+        }, name
+        assert {r.t: r.n_d for r in got} == {
+            t: sum(ev for u, ev in subjects if u >= t) for t in days
+        }, name
+        assert len(got) == len(days), name
+        if name == "mixed":
+            by_t = {r.t: r for r in got}
+            assert by_t[2].d == 0 and by_t[2].n == 7
+            assert by_t[7].d == by_t[7].n == 2
