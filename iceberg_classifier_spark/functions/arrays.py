@@ -16,11 +16,6 @@ from pyspark.sql import functions as F
 
 # ---- element-wise composites (ref main.py:64-68) --------------------------
 
-def vavg(a: Column | str, b: Column | str) -> Column:
-    """(a+b)/2 — the reference's band_3_0 composite."""
-    return F.zip_with(a, b, lambda x, y: (x + y) / 2)
-
-
 def vabsdiff(a: Column | str, b: Column | str) -> Column:
     """|a-b| — the reference's band_3 composite."""
     return F.zip_with(a, b, lambda x, y: F.abs(x - y))
@@ -60,14 +55,6 @@ def vsum(a: Column | str) -> Column:
 
 def vmean(a: Column | str) -> Column:
     return vsum(a) / F.size(a)
-
-
-def velem_min(a: Column | str) -> Column:
-    return F.array_min(a)
-
-
-def velem_max(a: Column | str) -> Column:
-    return F.array_max(a)
 
 
 def vstd(a: Column | str, mean: Column | None = None) -> Column:

@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from iceberg_classifier_spark.operators.timeline import raw_delay
 from iceberg_classifier_spark.plans.registry import query
 from iceberg_classifier_spark.sources.tables import load
 
@@ -114,13 +115,7 @@ def chain_ladder_development(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.date_trunc("month", F.col("o_orderdate").cast("date"))
             .cast("date")
             .alias("origin"),
-            F.least(
-                F.expr(
-                    "greatest(datediff(CAST(l_shipdate AS DATE),"
-                    " CAST(o_orderdate AS DATE)), 0) div 7"
-                ),
-                F.lit(_CL_MAX_DEV),
-            ).alias("dev"),
+            F.least(F.floor(raw_delay() / 7), F.lit(_CL_MAX_DEV)).alias("dev"),
         )
     )
     # cached: the ≤(origins × devs) triangle-cell frame is the root of

@@ -133,20 +133,9 @@ def _hashdim_sql(w: str, k: int) -> str:
     return f"(strpos('{_HEX}', substr(md5({w}), {k}, 1)) - 9)"
 
 
-def _hashdim_spark(w: str, k: int) -> str:
-    return f"(CAST(conv(substr(md5(CAST({w} AS BINARY)), {k}, 1), 16, 10) AS BIGINT) - 8)"
-
-
 def _dot_sql(a: str, b: str) -> str:
     return " + ".join(
         f"{_hashdim_sql(a, k)} * {_hashdim_sql(b, k)}"
-        for k in range(1, _MAXSIM_DIM + 1)
-    )
-
-
-def _dot_spark(a: str, b: str) -> str:
-    return " + ".join(
-        f"{_hashdim_spark(a, k)} * {_hashdim_spark(b, k)}"
         for k in range(1, _MAXSIM_DIM + 1)
     )
 

@@ -28,7 +28,7 @@ frame), never a neighborhood explosion.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from iceberg_classifier_spark.operators.timeline import order_day

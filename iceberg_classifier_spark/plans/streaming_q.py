@@ -6,7 +6,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from iceberg_classifier_spark.plans.registry import query
-from iceberg_classifier_spark.streaming.events import hourly_counts_stream
+from iceberg_classifier_spark.streaming.events import (
+    drain,
+    drain_to_table,
+    file_stream,
+    hourly_counts_stream,
+    staged_stream,
+    twice,
+)
 
 
 @query(
@@ -84,24 +91,10 @@ def streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup suite. Drained with availableNow; the emitted key set must equal
     batch DISTINCT. In production pair with withWatermark to bound state
     (dropDuplicatesWithinWatermark)."""
-    from iceberg_classifier_spark.streaming.events import _events_stream
-    import uuid as _uuid
-
-    from iceberg_classifier_spark.streaming.events import streaming_shuffle
-
-    stream = _events_stream(spark, sf_dir).select("user_id")
-    deduped = stream.dropDuplicates(["user_id"])
-    sink = f"stream_dedup_{_uuid.uuid4().hex[:8]}"
-    with streaming_shuffle(spark):
-        q = (
-            deduped.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(sink).orderBy("user_id")
+    deduped = (
+        staged_stream(spark, sf_dir).select("user_id").dropDuplicates(["user_id"])
+    )
+    return drain_to_table(spark, deduped, "append").orderBy("user_id")
 
 
 @query(
@@ -127,33 +120,18 @@ def streaming_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     hot path stays shuffle-free until the final keyed aggregation — the
     standard shape for dimension enrichment in a 100 TB/day ingest.
     """
-    from iceberg_classifier_spark.streaming.events import _events_stream
-    import uuid as _uuid
-
     dim = spark.createDataFrame(
         [("click", 1.0), ("view", 0.5), ("purchase", 5.0),
          ("signup", 3.0), ("error", 0.0)],
         "event_type string, weight double",
     )
-    stream = _events_stream(spark, sf_dir).select("event_type", "value")
+    stream = staged_stream(spark, sf_dir).select("event_type", "value")
     enriched = stream.join(F.broadcast(dim), "event_type")
     agg = enriched.groupBy("event_type", "weight").agg(
         F.count(F.lit(1)).alias("n_events"),
         F.round(F.sum(F.col("value") * F.col("weight")), 4).alias("weighted_value"),
     )
-    from iceberg_classifier_spark.streaming.events import streaming_shuffle
-
-    sink = f"stream_static_{_uuid.uuid4().hex[:8]}"
-    with streaming_shuffle(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(sink).orderBy("event_type")
+    return drain_to_table(spark, agg, "complete").orderBy("event_type")
 
 
 @query(
@@ -245,34 +223,13 @@ def streaming_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     feeds — state is bounded by (keys seen within the watermark), not by
     stream history; the dedup itself is one hash exchange on the key.
     """
-    import os as _os
-    import shutil as _shutil
-    import uuid as _uuid
-
-    from iceberg_classifier_spark.streaming.events import (
-        _stage_dir,
-        streaming_shuffle,
-    )
-    from iceberg_classifier_spark.sources.tables import normalize_ts, table_path
-
-    stage = _stage_dir(sf_dir, "events_dup2")
-    if not _os.path.exists(_os.path.join(stage, "b_copy.parquet")):
-        _os.makedirs(stage, exist_ok=True)
-        src = table_path(sf_dir, "events")
-        _shutil.copyfile(src, _os.path.join(stage, "a_orig.parquet"))
-        _shutil.copyfile(src, _os.path.join(stage, "b_copy.parquet"))
-    batch_schema = spark.read.parquet(table_path(sf_dir, "events")).schema
     # one file per micro-batch: the duplicate copy must arrive in a LATER
     # batch than the original, otherwise dropDuplicatesWithinWatermark only
     # ever dedups within a single batch and the watermark-bounded state
     # eviction this op exists to demonstrate never runs
-    stream = normalize_ts(
-        spark.readStream.schema(batch_schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stage)
-    )
     deduped = (
-        stream.withWatermark("ts", "2 hours")
+        staged_stream(spark, sf_dir, split=twice)
+        .withWatermark("ts", "2 hours")
         .dropDuplicatesWithinWatermark(["event_id"])
         .groupBy("event_type")
         .agg(
@@ -280,17 +237,7 @@ def streaming_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.sum("value"), 4).alias("sum_value"),
         )
     )
-    sink = f"stream_dedup_wm_{_uuid.uuid4().hex[:8]}"
-    with streaming_shuffle(spark):
-        q = (
-            deduped.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(sink).orderBy("event_type")
+    return drain_to_table(spark, deduped, "complete").orderBy("event_type")
 
 
 @query(
@@ -319,48 +266,34 @@ def streaming_checkpoint_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
     failure without duplicates or loss; the checkpoint (offset log +
     sink metadata log) is what makes a 100 TB/day pipeline restartable.
     """
-    import os as _os
-    import shutil as _shutil
+    import os
+    import shutil
+    import tempfile
 
-    from iceberg_classifier_spark.sources.tables import normalize_ts, table_path
-    from iceberg_classifier_spark.streaming.events import (
-        _stage_dir,
-        streaming_shuffle,
+    from iceberg_classifier_spark.sources.tables import table_path
+
+    # every call gets its own source, checkpoint and sink: nothing a
+    # previous call committed is read back
+    run = tempfile.mkdtemp(prefix="ckpt_restart_")
+    src, ckpt, out = (os.path.join(run, d) for d in ("src", "chk", "out"))
+    os.makedirs(src)
+    stream = file_stream(spark, sf_dir, "events", src, per_file=False).select(
+        "event_id", "event_type", "value"
     )
-
-    src = _stage_dir(sf_dir, "ckpt_src")
-    ckpt = _stage_dir(sf_dir, "ckpt_meta")
-    out = _stage_dir(sf_dir, "ckpt_out")
-    done = _os.path.join(out, "_DONE")
-    batch_schema = spark.read.parquet(table_path(sf_dir, "events")).schema
-
-    def drain_once():
-        stream = normalize_ts(
-            spark.readStream.schema(batch_schema).parquet(src)
-        ).select("event_id", "event_type", "value")
-        with streaming_shuffle(spark):
-            q = (
-                stream.writeStream.format("parquet")
-                .option("path", out)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-
-    if not _os.path.exists(done):
-        for d in (src, ckpt, out):
-            _shutil.rmtree(d, ignore_errors=True)
-        _os.makedirs(src, exist_ok=True)
-        _shutil.copyfile(
-            table_path(sf_dir, "events"), _os.path.join(src, "a_orig.parquet")
+    # run 1 processes A, commits offsets and terminates; run 2 is a new
+    # query on the SAME checkpoint and must process only B
+    for part in ("a_orig.parquet", "b_copy.parquet"):
+        shutil.copyfile(
+            os.path.realpath(table_path(sf_dir, "events")),
+            os.path.join(src, part),
         )
-        drain_once()  # run 1: processes A, commits offsets, terminates
-        _shutil.copyfile(
-            table_path(sf_dir, "events"), _os.path.join(src, "b_copy.parquet")
+        drain(
+            spark,
+            stream.writeStream.format("parquet")
+            .option("path", out)
+            .option("checkpointLocation", ckpt),
         )
-        drain_once()  # run 2: SAME checkpoint — must process only B
-        open(done, "w").close()
+    shutil.rmtree(src)  # the result reads only the sink
 
     sink = spark.read.parquet(out)
     per_id = sink.groupBy("event_id").agg(F.count(F.lit(1)).alias("c"))

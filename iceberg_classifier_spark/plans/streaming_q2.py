@@ -20,51 +20,24 @@ from pyspark.sql import functions as F
 from iceberg_classifier_spark import api
 from iceberg_classifier_spark.plans.dedup import N_BANDS, N_MINHASH, _bands_oracle
 from iceberg_classifier_spark.plans.registry import query
-from iceberg_classifier_spark.sources.tables import table_path
-from iceberg_classifier_spark.streaming.events import streaming_shuffle
+from iceberg_classifier_spark.streaming.events import drain, staged_stream
 
 
-def _doc_thirds_stream(spark: SparkSession, sf_dir: str):
-    """documents as THREE micro-batches split at doc_id thirds (cuts at
-    ``max_id div 3`` / ``2*max_id div 3``), one file per trigger, in
-    arrival order = doc_id order — so "earlier batch" always means
-    "smaller doc_id" and the incremental acceptance rule matches the
-    batch oracle."""
+def doc_thirds(t):
+    """documents split at doc_id thirds (cuts at ``max_id div 3`` /
+    ``2*max_id div 3``), in arrival order = doc_id order — so "earlier
+    batch" always means "smaller doc_id" and the incremental acceptance
+    rule matches the batch oracle."""
     import pyarrow.compute as pc
-    import pyarrow.parquet as pq
 
-    src = os.stat(table_path(sf_dir, "documents"))
-    stage = os.path.join(
-        tempfile.gettempdir(),
-        f"docs_thirds_{os.path.basename(os.path.normpath(sf_dir))}"
-        f"_{src.st_mtime_ns:x}_{src.st_size:x}",
-    )
-    if not os.path.exists(os.path.join(stage, "c_tail.parquet")):
-        os.makedirs(stage, exist_ok=True)
-        t = pq.read_table(table_path(sf_dir, "documents"))
-        max_id = pc.max(t["doc_id"]).as_py()
-        c1, c2 = max_id // 3, (2 * max_id) // 3
-        parts = {
-            "a_early.parquet": t.filter(pc.less_equal(t["doc_id"], c1)),
-            "b_mid.parquet": t.filter(
-                pc.and_(
-                    pc.greater(t["doc_id"], c1),
-                    pc.less_equal(t["doc_id"], c2),
-                )
-            ),
-            "c_tail.parquet": t.filter(pc.greater(t["doc_id"], c2)),
-        }
-        for i, (name, part) in enumerate(parts.items()):
-            path = os.path.join(stage, name)
-            pq.write_table(part, path)
-            os.utime(path, (1_700_000_000 + i * 100,) * 2)
-
-    batch_schema = spark.read.parquet(table_path(sf_dir, "documents")).schema
-    return (
-        spark.readStream.schema(batch_schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stage)
-    )
+    ids = t["doc_id"]
+    max_id = pc.max(ids).as_py()
+    c1, c2 = max_id // 3, (2 * max_id) // 3
+    return [
+        t.filter(pc.less_equal(ids, c1)),
+        t.filter(pc.and_(pc.greater(ids, c1), pc.less_equal(ids, c2))),
+        t.filter(pc.greater(ids, c2)),
+    ]
 
 
 _BANDS_ORACLE = _bands_oracle("documents")
@@ -132,7 +105,6 @@ def streaming_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     signatures and band keys are ``api.minhash_signatures`` /
     ``api.minhash_band_keys``, the code dedup_minhash_lsh runs).
     """
-    stream = _doc_thirds_stream(spark, sf_dir)
     run = uuid.uuid4().hex[:8]
     state_root = os.path.join(tempfile.gettempdir(), f"mh_store_{run}")
     store_versions: list[str] = []
@@ -196,14 +168,12 @@ def streaming_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             store_versions.append(store_dir)
         keys.unpersist()
 
-    with streaming_shuffle(spark):
-        q = (
-            stream.writeStream.foreachBatch(merge)
-            .option("checkpointLocation", os.path.join(state_root, "_chk"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    drain(
+        spark,
+        staged_stream(spark, sf_dir, "documents", split=doc_thirds)
+        .writeStream.foreachBatch(merge)
+        .option("checkpointLocation", os.path.join(state_root, "_chk")),
+    )
     return spark.createDataFrame(
         sorted(stats),
         "batch_id bigint, n_docs bigint, n_accepted bigint,"

@@ -28,19 +28,12 @@ def _sign_sql(j: str, i: str) -> str:
     )
 
 
-def _sign_spark(j: str, i: str) -> str:
-    return (
-        f"CASE WHEN substr(md5(CAST(concat(CAST({j} AS STRING), '_',"
-        f" CAST({i} AS STRING)) AS BINARY)), 1, 1) < '8'"
-        f" THEN CAST(1.0 AS DOUBLE) ELSE CAST(-1.0 AS DOUBLE) END"
-    )
-
-
 def _jl_project(emb_df, k: int = _JL_K):
     """(vec_id, e, p) via one Arrow-batched numpy kernel — the exact
-    float64 twin of the ``_sign_spark`` Catalyst expression.
+    float64 twin of the md5 sign projection ``_sign_sql`` spells for the
+    oracle.
 
-    The Catalyst spelling evaluates the sign CASE per (row, j, i) — the
+    A Catalyst spelling evaluates the sign CASE per (row, j, i) — the
     sign matrix is a plan constant, but the interpreted HOF recomputes
     its md5 k·dim = {_JL_K}·64 times PER ROW — measured 51.6 s for 49k
     rows at organic sf1, the same interpreted-HOF cost class the aHash

@@ -90,10 +90,6 @@ def load_parallel(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load(spark, sf_dir, name) for name in TABLES}
-
-
 def parquet_column_bounds(sf_dir: str, name: str, column: str):
     """(min, max) of a column from parquet FOOTER statistics — no Spark
     job, so plan-time eligibility checks (e.g. "do these ids fit an int64
@@ -151,9 +147,3 @@ def fixture_dir(sf_dir: str, kind: str, table: str) -> tuple[str, bool]:
 def mark_staged(path: str) -> None:
     os.makedirs(path, exist_ok=True)
     open(os.path.join(path, "_STAGED"), "w").close()
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register each table as a temp view for spark.sql access."""
-    for name in TABLES:
-        load(spark, sf_dir, name).createOrReplaceTempView(name)

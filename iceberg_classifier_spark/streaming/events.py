@@ -1,56 +1,133 @@
-"""Structured Streaming over the events table.
+"""Structured Streaming over the staged testdata tables.
 
-``readStream`` on the parquet directory with an event-time watermark and
-tumbling-window aggregation; the availableNow trigger drains the source
-deterministically (batch-equivalent semantics), so the streaming answer is
-oracle-checkable against plain SQL. In production the same plan runs
-unmodified against a Kafka/file stream with late data bounded by the
-watermark.
+Every streaming builder reads through one source and runs through one
+drain:
+
+- ``staged_stream`` stages a table as a directory of arriving files (a
+  symlink to the file, or ordered parts from a ``split`` function, one
+  part per micro-batch) and opens ``readStream`` on it with the raw file
+  schema;
+- ``drain`` runs a query with the availableNow trigger under pinned
+  shuffle partitions and waits for it; ``drain_to_table`` is its
+  memory-sink variant and returns the sink as a table.
+
+availableNow drains the source deterministically (batch-equivalent
+semantics), so each streaming answer is oracle-checkable against plain
+SQL. In production the same plans run unmodified against a Kafka/file
+stream with late data bounded by the watermark.
 """
 
 from __future__ import annotations
 
+import hashlib
 import os
+import shutil
 import tempfile
 import uuid
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 
 from iceberg_classifier_spark.sources.tables import normalize_ts, table_path
 
 
+@contextmanager
 def streaming_shuffle(spark: SparkSession, n: int = 8):
-    """Context manager pinning spark.sql.shuffle.partitions for a streaming
-    drain. Stateful streaming cost scales with state-store instances =
-    shuffle partitions × stateful operators × micro-batches, and the
-    testdata drain needs nowhere near the batch setting (measured: the
-    stream-stream join drops 12s → 4.4s at 8 partitions, identical rows).
-    Production sizes this to key cardinality instead."""
-    from contextlib import contextmanager
-
-    @contextmanager
-    def _ctx():
-        old = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(n))
-        try:
-            yield
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", old)
-
-    return _ctx()
+    """Pin spark.sql.shuffle.partitions for a streaming drain. Stateful
+    streaming cost scales with state-store instances = shuffle partitions
+    × stateful operators × micro-batches, and the testdata drain needs
+    nowhere near the batch setting (measured: the stream-stream join drops
+    12s → 4.4s at 8 partitions, identical rows). Production sizes this to
+    key cardinality instead."""
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(n))
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
 
 
-def _stage_dir(sf_dir: str, kind: str) -> str:
-    """Temp staging dir for the single-file→directory stream adapter, keyed
-    by the source file's (mtime, size) fingerprint so driver-regenerated
-    testdata never hits a stale cache from a previous run."""
-    src = os.stat(table_path(sf_dir, "events"))
-    tag = f"{src.st_mtime_ns:x}_{src.st_size:x}"
-    return os.path.join(
+def drain(spark: SparkSession, writer: DataStreamWriter) -> None:
+    """Start ``writer`` with the availableNow trigger and wait until it has
+    processed everything its source held at start."""
+    with streaming_shuffle(spark):
+        writer.trigger(availableNow=True).start().awaitTermination()
+
+
+def drain_to_table(spark: SparkSession, df: DataFrame, mode: str) -> DataFrame:
+    """Drain ``df`` into a fresh memory sink in output ``mode`` and return
+    the sink's table."""
+    sink = f"stream_{uuid.uuid4().hex[:12]}"
+    drain(spark, df.writeStream.format("memory").queryName(sink).outputMode(mode))
+    return spark.table(sink)
+
+
+def file_stream(
+    spark: SparkSession, sf_dir: str, table: str, path: str, per_file: bool
+) -> DataFrame:
+    """``readStream`` over the directory ``path`` with the raw schema of
+    ``table`` (ts stays long nanos under the nanosAsLong flag, NOT the
+    converted schema from tables.load); ``per_file`` makes each file its
+    own micro-batch, in mtime order. events' ts is normalized to µs."""
+    schema = spark.read.parquet(os.path.realpath(table_path(sf_dir, table))).schema
+    reader = spark.readStream.schema(schema)
+    if per_file:
+        reader = reader.option("maxFilesPerTrigger", "1")
+    df = reader.parquet(path)
+    return normalize_ts(df) if table == "events" else df
+
+
+def _stage(sf_dir: str, table: str, split) -> str:
+    """Staging directory for the table as a stream of files: a symlink to
+    the file when ``split`` is None, else the parts ``split(pyarrow
+    table)`` returns, written in order with increasing mtimes
+    (FileStreamSource orders files by mtime). FileStreamSource reads a
+    directory and the testdata ships one file per table; the production
+    layout already is a directory of arriving files. Keyed on the file's real
+    path, (mtime, size) fingerprint and the split's name, so regenerated
+    testdata, a relative ``sf_dir`` or two checkouts sharing a frame
+    basename never meet a stale or foreign stage. Built under a private
+    name and renamed into place, so a half-written stage is never read."""
+    src = os.path.realpath(table_path(sf_dir, table))
+    st = os.stat(src)
+    kind = "link" if split is None else f"{split.__module__}.{split.__qualname__}"
+    key = f"{src}|{st.st_mtime_ns}|{st.st_size}|{kind}".encode()
+    stage = os.path.join(
         tempfile.gettempdir(),
-        f"{kind}_{os.path.basename(os.path.normpath(sf_dir))}_{tag}",
+        f"stream_{table}_{hashlib.sha256(key).hexdigest()[:16]}",
     )
+    if os.path.isdir(stage):
+        return stage
+    tmp = f"{stage}.{uuid.uuid4().hex[:8]}"
+    os.makedirs(tmp)
+    if split is None:
+        os.symlink(src, os.path.join(tmp, f"{table}.parquet"))
+    else:
+        import pyarrow.parquet as pq
+
+        for i, part in enumerate(split(pq.read_table(src))):
+            path = os.path.join(tmp, f"part-{i}.parquet")
+            pq.write_table(part, path)
+            os.utime(path, (1_700_000_000 + i * 100,) * 2)
+    try:
+        os.rename(tmp, stage)
+    except OSError:
+        shutil.rmtree(tmp)
+        if not os.path.isdir(stage):  # not a stage another caller renamed first
+            raise
+    return stage
+
+
+def staged_stream(
+    spark: SparkSession, sf_dir: str, table: str = "events", split=None
+) -> DataFrame:
+    """The table as a stream: one file (``split`` None), or the ordered
+    parts of ``split`` — a named function from a pyarrow table to a list
+    of tables — arriving one part per micro-batch."""
+    stage = _stage(sf_dir, table, split)
+    return file_stream(spark, sf_dir, table, stage, per_file=split is not None)
 
 
 def _epoch_ints(table):
@@ -68,25 +145,49 @@ def _epoch_ints(table):
     return pc.cast(col, "int64"), unit
 
 
+def late_thirds(t):
+    """Mid-month events, then the most recent, then the earliest days
+    arriving late (cuts at Jan 8 / Jan 20)."""
+    import pyarrow.compute as pc
+
+    ns, unit = _epoch_ints(t)
+    d8 = 1704672000 * unit   # 2024-01-08T00:00:00Z
+    d20 = 1705708800 * unit  # 2024-01-20T00:00:00Z
+    return [
+        t.filter(pc.and_(pc.greater_equal(ns, d8), pc.less(ns, d20))),
+        t.filter(pc.greater_equal(ns, d20)),
+        t.filter(pc.less(ns, d8)),
+    ]
+
+
+def jan_thirds(t):
+    """Three chronological parts split at Jan 11 / Jan 21 (the data spans
+    January 2024 only)."""
+    import pyarrow.compute as pc
+
+    ns, unit = _epoch_ints(t)
+    cut1 = 1704931200 * unit  # 2024-01-11T00:00:00Z
+    cut2 = 1705795200 * unit  # 2024-01-21T00:00:00Z
+    return [
+        t.filter(pc.less(ns, cut1)),
+        t.filter(pc.and_(pc.greater_equal(ns, cut1), pc.less(ns, cut2))),
+        t.filter(pc.greater_equal(ns, cut2)),
+    ]
+
+
+def twice(t):
+    """The whole table, then a second copy of it: at-least-once delivery."""
+    return [t, t]
+
+
 def hourly_counts_stream(
     spark: SparkSession, sf_dir: str, watermark: str = "2 hours"
 ) -> DataFrame:
     """Windowed streaming aggregation, drained with availableNow into a
     memory sink; returns the materialized result."""
-    # raw file schema (ts = long nanos under the nanosAsLong flag), NOT the
-    # converted schema from tables.load
-    batch_schema = spark.read.parquet(table_path(sf_dir, "events")).schema
-    # FileStreamSource requires a directory; testdata ships a single parquet
-    # file, so stage a symlink dir (the production layout IS a directory of
-    # arriving files — this adapter only exists for the single-file testdata).
-    stage = _stage_dir(sf_dir, "events_stream")
-    os.makedirs(stage, exist_ok=True)
-    link = os.path.join(stage, "events.parquet")
-    if not os.path.exists(link):
-        os.symlink(table_path(sf_dir, "events"), link)
-    stream = normalize_ts(spark.readStream.schema(batch_schema).parquet(stage))
     agg = (
-        stream.withWatermark("ts", watermark)
+        staged_stream(spark, sf_dir)
+        .withWatermark("ts", watermark)
         .groupBy(F.window("ts", "1 hour").alias("win"), F.col("event_type"))
         .agg(
             F.count(F.lit(1)).alias("n_events"),
@@ -99,28 +200,7 @@ def hourly_counts_stream(
             "sum_value",
         )
     )
-    sink = f"stream_hourly_{uuid.uuid4().hex[:8]}"
-    with streaming_shuffle(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(sink)
-
-
-def _events_stream(spark: SparkSession, sf_dir: str):
-    """readStream over the staged events dir with ts normalized to µs."""
-    batch_schema = spark.read.parquet(table_path(sf_dir, "events")).schema
-    stage = _stage_dir(sf_dir, "events_stream")
-    os.makedirs(stage, exist_ok=True)
-    link = os.path.join(stage, "events.parquet")
-    if not os.path.exists(link):
-        os.symlink(table_path(sf_dir, "events"), link)
-    return normalize_ts(spark.readStream.schema(batch_schema).parquet(stage))
+    return drain_to_table(spark, agg, "complete")
 
 
 def session_stream(spark: SparkSession, sf_dir: str, gap: str = "30 minutes") -> DataFrame:
@@ -133,9 +213,9 @@ def session_stream(spark: SparkSession, sf_dir: str, gap: str = "30 minutes") ->
     production configuration); complete mode here is only for the
     deterministic memory-sink check.
     """
-    stream = _events_stream(spark, sf_dir)
     agg = (
-        stream.groupBy(F.session_window("ts", gap).alias("win"), F.col("user_id"))
+        staged_stream(spark, sf_dir)
+        .groupBy(F.session_window("ts", gap).alias("win"), F.col("user_id"))
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.round(F.sum("value"), 4).alias("sum_value"),
@@ -148,17 +228,7 @@ def session_stream(spark: SparkSession, sf_dir: str, gap: str = "30 minutes") ->
             "sum_value",
         )
     )
-    sink = f"stream_sessions_{uuid.uuid4().hex[:8]}"
-    with streaming_shuffle(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(sink)
+    return drain_to_table(spark, agg, "complete")
 
 
 def user_stats_stateful_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -180,8 +250,6 @@ def user_stats_stateful_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         StructField,
         StructType,
     )
-
-    stream = _events_stream(spark, sf_dir)
 
     out_schema = StructType(
         [
@@ -216,26 +284,21 @@ def user_stats_stateful_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             }
         )
 
-    emitted = stream.select("user_id", "event_id", "value").groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    sink = f"stream_userstats_{uuid.uuid4().hex[:8]}"
-    with streaming_shuffle(spark):
-        q = (
-            emitted.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
+    emitted = (
+        staged_stream(spark, sf_dir)
+        .select("user_id", "event_id", "value")
+        .groupBy("user_id")
+        .applyInPandasWithState(
+            update,
+            outputStructType=out_schema,
+            stateStructType=state_schema,
+            outputMode="update",
+            timeoutConf=GroupStateTimeout.NoTimeout,
         )
-        q.awaitTermination()
+    )
     # keep each user's final emission (counts are monotone across batches)
     return (
-        spark.table(sink)
+        drain_to_table(spark, emitted, "update")
         .groupBy("user_id")
         .agg(
             F.max("n_events").alias("n_events"),
@@ -259,87 +322,15 @@ def late_data_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB this is the production shape: withWatermark bounds state
     (evicted windows leave the store) and bounds how late a row may be.
     """
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-
-    stage = _stage_dir(sf_dir, "events_late3")
-    if not os.path.exists(os.path.join(stage, "c_late.parquet")):
-        os.makedirs(stage, exist_ok=True)
-        t = pq.read_table(table_path(sf_dir, "events"))
-        ns, unit = _epoch_ints(t)
-        d8 = 1704672000 * unit   # 2024-01-08T00:00:00Z
-        d20 = 1705708800 * unit  # 2024-01-20T00:00:00Z
-        parts = {
-            "a_mid.parquet": t.filter(
-                pc.and_(pc.greater_equal(ns, d8), pc.less(ns, d20))
-            ),
-            "b_recent.parquet": t.filter(pc.greater_equal(ns, d20)),
-            "c_late.parquet": t.filter(pc.less(ns, d8)),
-        }
-        for i, (name, part) in enumerate(parts.items()):
-            path = os.path.join(stage, name)
-            pq.write_table(part, path)
-            # mtime order fixes batch order (FileStreamSource sorts by it)
-            os.utime(path, (1_700_000_000 + i * 100,) * 2)
-
-    batch_schema = spark.read.parquet(table_path(sf_dir, "events")).schema
-    stream = normalize_ts(
-        spark.readStream.schema(batch_schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stage)
-    )
     agg = (
-        stream.withWatermark("ts", "1 hour")
+        staged_stream(spark, sf_dir, split=late_thirds)
+        .withWatermark("ts", "1 hour")
         .groupBy(F.window("ts", "1 hour").alias("win"))
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(F.col("win.start").alias("hour_start"), "n_events")
     )
-    sink = f"stream_late_{uuid.uuid4().hex[:8]}"
-    with streaming_shuffle(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")  # only watermark-finalized windows are emitted
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(sink)
-
-
-def _jan_thirds_stream(spark: SparkSession, sf_dir: str):
-    """events as THREE chronological micro-batches (split at Jan 11 /
-    Jan 21 — the data spans January 2024 only), one file per trigger,
-    with ts normalized to µs. Shared by the cross-batch streaming demos."""
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-
-    stage = _stage_dir(sf_dir, "events_upsert3_jan")
-    if not os.path.exists(os.path.join(stage, "c_tail.parquet")):
-        os.makedirs(stage, exist_ok=True)
-        t = pq.read_table(table_path(sf_dir, "events"))
-        ns, unit = _epoch_ints(t)
-        cut1 = 1704931200 * unit  # 2024-01-11T00:00:00Z
-        cut2 = 1705795200 * unit  # 2024-01-21T00:00:00Z
-        parts = {
-            "a_early.parquet": t.filter(pc.less(ns, cut1)),
-            "b_mid.parquet": t.filter(
-                pc.and_(pc.greater_equal(ns, cut1), pc.less(ns, cut2))
-            ),
-            "c_tail.parquet": t.filter(pc.greater_equal(ns, cut2)),
-        }
-        for i, (name, part) in enumerate(parts.items()):
-            path = os.path.join(stage, name)
-            pq.write_table(part, path)
-            os.utime(path, (1_700_000_000 + i * 100,) * 2)
-
-    batch_schema = spark.read.parquet(table_path(sf_dir, "events")).schema
-    stream = normalize_ts(
-        spark.readStream.schema(batch_schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stage)
-    )
-    return stream
+    # append: only watermark-finalized windows are emitted
+    return drain_to_table(spark, agg, "append")
 
 
 def upsert_state_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -357,8 +348,6 @@ def upsert_state_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     sink that supports atomic replace, with state sized by |keys|, not by
     stream length.
     """
-    stream = _jan_thirds_stream(spark, sf_dir)
-
     run = uuid.uuid4().hex[:8]
     state_root = os.path.join(tempfile.gettempdir(), f"upsert_state_{run}")
     versions: list[str] = []
@@ -393,14 +382,12 @@ def upsert_state_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         merged.write.mode("overwrite").parquet(out)
         versions.append(out)
 
-    with streaming_shuffle(spark):
-        q = (
-            stream.writeStream.foreachBatch(merge)
-            .option("checkpointLocation", os.path.join(state_root, "_chk"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    drain(
+        spark,
+        staged_stream(spark, sf_dir, split=jan_thirds)
+        .writeStream.foreachBatch(merge)
+        .option("checkpointLocation", os.path.join(state_root, "_chk")),
+    )
     final = spark.read.parquet(versions[-1])
     return final.select(
         "user_id",
@@ -421,7 +408,7 @@ def attribution_join_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     batches) are still matched from state.
     """
     clicks = (
-        _jan_thirds_stream(spark, sf_dir)
+        staged_stream(spark, sf_dir, split=jan_thirds)
         .filter(F.col("event_type") == "click")
         .select(
             F.col("user_id").alias("c_user"),
@@ -431,7 +418,7 @@ def attribution_join_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withWatermark("click_ts", "2 hours")
     )
     purchases = (
-        _jan_thirds_stream(spark, sf_dir)
+        staged_stream(spark, sf_dir, split=jan_thirds)
         .filter(F.col("event_type") == "purchase")
         .select(
             F.col("user_id").alias("p_user"),
@@ -452,17 +439,7 @@ def attribution_join_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         F.col("p_user").alias("user_id"), "purchase_id", "click_id"
     )
-    sink = f"stream_attrib_{uuid.uuid4().hex[:8]}"
-    with streaming_shuffle(spark):
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(sink)
+    return drain_to_table(spark, joined, "append")
 
 
 def transform_with_state_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -493,7 +470,7 @@ def transform_with_state_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         StructType,
     )
 
-    stream = _events_stream(spark, sf_dir).select("user_id", "value")
+    stream = staged_stream(spark, sf_dir).select("user_id", "value")
 
     out_schema = StructType(
         [
@@ -504,13 +481,17 @@ def transform_with_state_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
     )
 
-    def _fold(state_tuple, pdfs):
-        n, s, mx = state_tuple
+    def _fold(key, prev, pdfs):
+        """(new state, emitted row) after folding ``pdfs`` into ``prev``."""
+        n, s, mx = prev
         for pdf in pdfs:
             n += len(pdf)
             s += float(pdf["value"].sum())
             mx = max(mx, float(pdf["value"].max()))
-        return n, s, mx
+        row = pd.DataFrame(
+            {"user_id": [key[0]], "n_events": [n], "sum_value": [s], "max_value": [mx]}
+        )
+        return (n, s, mx), row
 
     try:
         have_protobuf = importlib.util.find_spec("google.protobuf") is not None
@@ -535,16 +516,9 @@ def transform_with_state_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
                     if self._state.exists()
                     else (0, 0.0, float("-inf"))
                 )
-                n, s, mx = _fold(prev, rows)
-                self._state.update((n, s, mx))
-                yield pd.DataFrame(
-                    {
-                        "user_id": [key[0]],
-                        "n_events": [n],
-                        "sum_value": [s],
-                        "max_value": [mx],
-                    }
-                )
+                acc, row = _fold(key, prev, rows)
+                self._state.update(acc)
+                yield row
 
             def close(self) -> None:
                 pass
@@ -568,16 +542,9 @@ def transform_with_state_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         def update(key, pdfs, state: GroupState):
             prev = tuple(state.get) if state.exists else (0, 0.0, float("-inf"))
-            n, s, mx = _fold(prev, pdfs)
-            state.update((n, s, mx))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_events": [n],
-                    "sum_value": [s],
-                    "max_value": [mx],
-                }
-            )
+            acc, row = _fold(key, prev, pdfs)
+            state.update(acc)
+            yield row
 
         emitted = stream.groupBy("user_id").applyInPandasWithState(
             update,
@@ -587,7 +554,6 @@ def transform_with_state_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
 
-    sink = f"stream_tws_{uuid.uuid4().hex[:8]}"
     old_provider = spark.conf.get(
         "spark.sql.streaming.stateStore.providerClass", None
     )
@@ -599,15 +565,7 @@ def transform_with_state_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             "RocksDBStateStoreProvider",
         )
     try:
-        with streaming_shuffle(spark):
-            q = (
-                emitted.writeStream.format("memory")
-                .queryName(sink)
-                .outputMode("update")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
+        final = drain_to_table(spark, emitted, "update")
     finally:
         if have_protobuf:
             if old_provider is None:
@@ -620,8 +578,7 @@ def transform_with_state_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
                     old_provider,
                 )
     return (
-        spark.table(sink)
-        .groupBy("user_id")
+        final.groupBy("user_id")
         .agg(
             F.max("n_events").alias("n_events"),
             F.round(F.max_by("sum_value", "n_events"), 4).alias("sum_value"),

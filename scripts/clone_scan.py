@@ -8,7 +8,9 @@ line is duplicated when it lies in a window whose text occurs at least
 twice in the package. Prints the duplicated-line total and how many of
 those lines lie inside a string literal that spans more than one row:
 oracle SQL and docstrings. A one-row literal, such as the quoted column
-name in `.groupBy("word")`, leaves its line counted as code.
+name in `.groupBy("word")`, leaves its line counted as code. Then prints
+the same two counts per module, largest first, for every module with a
+duplicated line.
 
 Usage: python scripts/clone_scan.py
 """
@@ -61,6 +63,12 @@ def main():
                 dup.update((path, i) for i, _ in files[path][0][k : k + WINDOW])
     in_str = sum(1 for path, i in dup if i in files[path][1])
     print(f"duplicated lines: {len(dup)} ({in_str} in multi-line string literals, {len(dup) - in_str} other)")
+    per = defaultdict(lambda: [0, 0])
+    for path, i in dup:
+        per[path][0] += 1
+        per[path][1] += i in files[path][1]
+    for path, (n, s) in sorted(per.items(), key=lambda kv: (-kv[1][0], kv[0])):
+        print(f"  {os.path.relpath(path, PKG)}: {n} ({s} in strings)")
 
 
 if __name__ == "__main__":

@@ -3,7 +3,11 @@
 Runs EVERY registered query that carries a DuckDB oracle at the given SF,
 side-by-side with that oracle, and records per-query pass/fail (row count,
 schema, and order-insensitive 6dp value comparison — the same normalize as
-tests/test_oracle_parity.py, which this reuses) plus wall time. The pytest
+tests/test_oracle_parity.py, which this reuses) plus wall time, and what
+the engine side returned: ``rows``, ``null_cols`` (columns with no
+non-NULL value) and ``digest`` (sha256 prefix of the normalized result),
+so a pass that compared 0 rows or all-NULL columns shows in the artifact.
+The pytest
 suite proves the same thing interactively; this script exists so the GREEN
 claim is a committed artifact a judge can read (round-6 verdict task 2/3),
 at sweep SFs (0.01, 0.1) the default pytest run doesn't cover.
@@ -27,6 +31,7 @@ and why.
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import sys
@@ -112,8 +117,10 @@ def main() -> None:
             print(name, out[name]["status"], flush=True)
             continue
         t0 = time.perf_counter()
+        seen: dict[str, object] = {}
         try:
             got = normalize(qd.fn(spark, sf_dir).toPandas())
+            seen = result_fields(got)
             exp_df, timed_out_after = _run_oracle(
                 sf_dir, qd.oracle, oracle_timeout
             )
@@ -126,6 +133,7 @@ def main() -> None:
                     "timeout": True,
                     "oracle_sec": round(timed_out_after, 2),
                     "sec": round(time.perf_counter() - t0, 2),
+                    **seen,
                 }
                 print(name, out[name]["status"], flush=True)
                 _dump(out_path, sf_dir, n_pass, n_fail, out)
@@ -164,15 +172,26 @@ def main() -> None:
             status = f"ERR {type(exc).__name__}: {exc}"[:300]
             traceback.print_exc()
         dt = round(time.perf_counter() - t0, 2)
-        out[name] = {"status": status, "sec": dt}
+        out[name] = {"status": status, "sec": dt, **seen}
         if status == "pass":
             n_pass += 1
         else:
             n_fail += 1
-        print(name, status, dt, flush=True)
+        print(name, status, dt, seen, flush=True)
         _dump(out_path, sf_dir, n_pass, n_fail, out)
     _dump(out_path, sf_dir, n_pass, n_fail, out, final=True)
     print("PASS:", n_pass, "FAIL/ERR:", n_fail, flush=True)
+
+
+def result_fields(got) -> dict[str, object]:
+    """What a comparison saw of a normalized engine result: its row count,
+    how many columns hold no non-NULL value (every column, vacuously, when
+    there are no rows) and a digest of its values."""
+    return {
+        "rows": len(got),
+        "null_cols": int(got.isna().all().sum()),
+        "digest": hashlib.sha256(got.to_csv(index=False).encode()).hexdigest()[:16],
+    }
 
 
 def _oracle_worker(sf_dir: str, sql: str, out_base: str) -> None:
