@@ -10,7 +10,6 @@ explicit deterministic order on both engines.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -21,7 +20,7 @@ from iceberg_classifier_spark.operators.timeline import (
     km_survival,
 )
 from iceberg_classifier_spark.plans.registry import query
-from iceberg_classifier_spark.sources.tables import load, table_path
+from iceberg_classifier_spark.sources.tables import fixture_dir, load
 
 _CENTS_V = "CAST(round(value * 100) AS BIGINT)"
 _O_CENTS = "CAST(round(o_totalprice * 100) AS BIGINT)"
@@ -38,19 +37,6 @@ def _md5_prefix_sql(expr: str) -> str:
                          substr(md5({expr}), CAST(i AS INTEGER), 1)) - 1
              AS BIGINT))),
       (acc, c) -> acc * 16 + c)"""
-
-
-def _stage(sf_dir: str, kind: str, table: str = "orders") -> str:
-    """Fixture-staging dir keyed by the identity of the parquet the fixture
-    is actually derived from, so driver-regenerated testdata never reuses a
-    stale copy (a fixture built from ``documents`` must not be keyed by
-    ``orders``' mtime — the driver can regenerate one without the other)."""
-    src = os.stat(table_path(sf_dir, table))
-    return os.path.join(
-        tempfile.gettempdir(),
-        f"{kind}_{os.path.basename(os.path.normpath(sf_dir))}"
-        f"_{src.st_mtime_ns:x}_{src.st_size:x}",
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -371,8 +357,7 @@ def schema_evolution_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     projection. In production the merged schema would be pinned in a
     catalog; the read path exercised here is the same.
     """
-    stage = _stage(sf_dir, "schema_evo")
-    if not os.path.exists(os.path.join(stage, "_done")):
+    def build(stage: str) -> None:
         o = load(spark, sf_dir, "orders")
         v1 = o.filter(F.expr("o_orderkey % 2 = 0")).select(
             F.expr(_O_CENTS).alias("cents")
@@ -383,7 +368,8 @@ def schema_evolution_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         v1.write.mode("overwrite").parquet(os.path.join(stage, "v1"))
         v2.write.mode("overwrite").parquet(os.path.join(stage, "v2"))
-        open(os.path.join(stage, "_done"), "w").close()
+
+    stage = fixture_dir(sf_dir, "schema_evo", "orders", build)
     merged = spark.read.option("mergeSchema", "true").parquet(
         os.path.join(stage, "v1"), os.path.join(stage, "v2")
     )
@@ -430,11 +416,7 @@ def corrupt_record_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
     (per-partition text write with the corruption injected column-side) —
     never a driver-side collect, which would OOM the driver at 100× data.
     """
-    stage = _stage(sf_dir, "dlq_jsonl", table="documents")
-    marker = os.path.join(stage, "_done")
-    feed_dir = os.path.join(stage, "feed")
-    if not os.path.exists(marker):
-        os.makedirs(stage, exist_ok=True)
+    def build(stage: str) -> None:
         line = F.when(
             F.col("doc_id") % 7 == 0,
             F.format_string('{"doc_id": %d, "lang": ', F.col("doc_id")),
@@ -446,9 +428,11 @@ def corrupt_record_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("doc_id", "lang", "n_chars")
             .select(line.alias("value"))
             .write.mode("overwrite")
-            .text(feed_dir)
+            .text(os.path.join(stage, "feed"))
         )
-        open(marker, "w").close()
+
+    stage = fixture_dir(sf_dir, "dlq_jsonl", "documents", build)
+    feed_dir = os.path.join(stage, "feed")
     feed = (
         spark.read.schema(
             "doc_id BIGINT, lang STRING, n_chars BIGINT, _corrupt_record STRING"

@@ -16,11 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from iceberg_classifier_spark.plans.registry import query
-from iceberg_classifier_spark.sources.tables import (
-    fixture_dir,
-    load,
-    mark_staged,
-)
+from iceberg_classifier_spark.sources.tables import fixture_dir, load
 
 
 @query(
@@ -61,9 +57,7 @@ def snapshot_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     indirection real table formats use, so swapping in Iceberg changes
     only the reader.
     """
-    path, built = fixture_dir(sf_dir, "timetravel", "customer")
-    manifest_path = os.path.join(path, "manifest.json")
-    if not built:
+    def build(path: str) -> None:
         c = load(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
         v1 = c
         v2 = c.where(F.col("c_custkey") % 97 != 0).select(
@@ -74,12 +68,13 @@ def snapshot_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         v1.write.mode("overwrite").parquet(os.path.join(path, "v1"))
         v2.write.mode("overwrite").parquet(os.path.join(path, "v2"))
-        with open(manifest_path, "w") as f:
+        with open(os.path.join(path, "manifest.json"), "w") as f:
             json.dump(
                 {"current": 2, "snapshots": {"1": "v1", "2": "v2"}}, f
             )
-        mark_staged(path)
-    with open(manifest_path) as f:
+
+    path = fixture_dir(sf_dir, "timetravel", "customer", build)
+    with open(os.path.join(path, "manifest.json")) as f:
         manifest = json.load(f)
 
     def read_version(v: int) -> DataFrame:

@@ -10,7 +10,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from iceberg_classifier_spark.plans.registry import query
-from iceberg_classifier_spark.sources.tables import fixture_dir, load, mark_staged
+from iceberg_classifier_spark.sources.tables import fixture_dir, load
 
 
 @query(
@@ -37,8 +37,7 @@ def xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     bytes of CSV — the op exists for interop coverage, not as the
     recommended interchange format.
     """
-    path, built = fixture_dir(sf_dir, "xml_demo", "orders")
-    if not built:
+    def build(path: str) -> None:
         o = load(spark, sf_dir, "orders").select(
             "o_orderkey", "o_orderpriority", "o_totalprice"
         )
@@ -49,7 +48,8 @@ def xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             .option("rowTag", "order")
             .save(path)
         )
-        mark_staged(path)
+
+    path = fixture_dir(sf_dir, "xml_demo", "orders", build)
     r = (
         spark.read.schema(
             "o_orderkey bigint, o_orderpriority string, o_totalprice double"

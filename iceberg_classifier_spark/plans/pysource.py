@@ -46,10 +46,9 @@ def python_datasource_jsonl(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
-    from iceberg_classifier_spark.sources.tables import fixture_dir, mark_staged
+    from iceberg_classifier_spark.sources.tables import fixture_dir
 
-    path, built = fixture_dir(sf_dir, "jsonl_src", "events")
-    if not built:
+    def build(path: str) -> None:
         ev = load(spark, sf_dir, "events").select(
             "event_id", "user_id", "event_type", "value"
         )
@@ -58,7 +57,8 @@ def python_datasource_jsonl(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.struct("event_id", "user_id", "event_type", "value")
             ).alias("value")
         ).repartition(4).write.mode("overwrite").text(path)
-        mark_staged(path)
+
+    path = fixture_dir(sf_dir, "jsonl_src", "events", build)
 
     class JsonlSource(DataSource):
         @classmethod

@@ -288,15 +288,15 @@ def partitioned_prune_readback(spark: SparkSession, sf_dir: str) -> DataFrame:
     lossless.
     """
     from iceberg_classifier_spark.sources.sinks import write_parquet
-    from iceberg_classifier_spark.sources.tables import fixture_dir, mark_staged
+    from iceberg_classifier_spark.sources.tables import fixture_dir
 
-    path, built = fixture_dir(sf_dir, "part_demo", "events")
-    if not built:
+    def build(path: str) -> None:
         e = load(spark, sf_dir, "events").withColumn(
             "event_date", F.to_date("ts")
         )
         write_parquet(e, path, partition_by=["event_date"])
-        mark_staged(path)
+
+    path = fixture_dir(sf_dir, "part_demo", "events", build)
     r = spark.read.parquet(path).where(
         F.col("event_date").between("2024-01-10", "2024-01-16")
     )
@@ -330,10 +330,9 @@ def csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     is lossless (doubles survive via shortest-representation printing,
     summed as exact integer cents).
     """
-    from iceberg_classifier_spark.sources.tables import fixture_dir, mark_staged
+    from iceberg_classifier_spark.sources.tables import fixture_dir
 
-    path, built = fixture_dir(sf_dir, "csv_demo", "orders")
-    if not built:
+    def build(path: str) -> None:
         o = load(spark, sf_dir, "orders").select(
             "o_orderkey",
             "o_orderstatus",
@@ -341,7 +340,8 @@ def csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.to_date("o_orderdate").alias("o_orderdate"),
         )
         o.write.mode("overwrite").option("header", True).csv(path)
-        mark_staged(path)
+
+    path = fixture_dir(sf_dir, "csv_demo", "orders", build)
     r = spark.read.schema(
         "o_orderkey bigint, o_orderstatus string, o_totalprice double,"
         " o_orderdate date"
@@ -381,13 +381,13 @@ def orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     same filter to the original table, proving the round-trip + pushdown
     path is lossless.
     """
-    from iceberg_classifier_spark.sources.tables import fixture_dir, mark_staged
+    from iceberg_classifier_spark.sources.tables import fixture_dir
 
-    path, built = fixture_dir(sf_dir, "orc_demo", "orders")
-    if not built:
+    def build(path: str) -> None:
         o = load(spark, sf_dir, "orders")
         o.write.mode("overwrite").option("compression", "zlib").orc(path)
-        mark_staged(path)
+
+    path = fixture_dir(sf_dir, "orc_demo", "orders", build)
     r = spark.read.orc(path).where(
         F.col("o_orderdate") >= F.lit("1997-01-01 00:00:00").cast("timestamp")
     )
@@ -431,18 +431,18 @@ def compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     (RoundRobinPartitioning); production systems drive the target file
     count from bytes/file (e.g. 512 MB), not a constant.
     """
-    from iceberg_classifier_spark.sources.tables import fixture_dir, mark_staged
+    from iceberg_classifier_spark.sources.tables import fixture_dir
 
-    root, built = fixture_dir(sf_dir, "compact_demo", "events")
+    def build(root: str) -> None:
+        e = load(spark, sf_dir, "events")
+        e.repartition(64).write.mode("overwrite").parquet(f"{root}/frag")
+        spark.read.parquet(f"{root}/frag").repartition(4).write.mode(
+            "overwrite"
+        ).parquet(f"{root}/compacted")
+
+    root = fixture_dir(sf_dir, "compact_demo", "events", build)
     frag = f"{root}/frag"
     compacted = f"{root}/compacted"
-    if not built:
-        e = load(spark, sf_dir, "events")
-        e.repartition(64).write.mode("overwrite").parquet(frag)
-        spark.read.parquet(frag).repartition(4).write.mode(
-            "overwrite"
-        ).parquet(compacted)
-        mark_staged(root)
 
     def report(path: str, stage: str) -> DataFrame:
         d = spark.read.parquet(path)

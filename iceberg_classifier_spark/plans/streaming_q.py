@@ -273,43 +273,47 @@ def streaming_checkpoint_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
     from iceberg_classifier_spark.sources.tables import table_path
 
     # every call gets its own source, checkpoint and sink: nothing a
-    # previous call committed is read back
+    # previous call committed is read back, and nothing outlives the call
     run = tempfile.mkdtemp(prefix="ckpt_restart_")
-    src, ckpt, out = (os.path.join(run, d) for d in ("src", "chk", "out"))
-    os.makedirs(src)
-    stream = file_stream(spark, sf_dir, "events", src, per_file=False).select(
-        "event_id", "event_type", "value"
-    )
-    # run 1 processes A, commits offsets and terminates; run 2 is a new
-    # query on the SAME checkpoint and must process only B
-    for part in ("a_orig.parquet", "b_copy.parquet"):
-        shutil.copyfile(
-            os.path.realpath(table_path(sf_dir, "events")),
-            os.path.join(src, part),
+    try:
+        src, ckpt, out = (os.path.join(run, d) for d in ("src", "chk", "out"))
+        os.makedirs(src)
+        stream = file_stream(spark, sf_dir, "events", src).select(
+            "event_id", "event_type", "value"
         )
-        drain(
-            spark,
-            stream.writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt),
+        # run 1 processes A, commits offsets and terminates; run 2 is a new
+        # query on the SAME checkpoint and must process only B
+        for part in ("a_orig.parquet", "b_copy.parquet"):
+            shutil.copyfile(
+                os.path.realpath(table_path(sf_dir, "events")),
+                os.path.join(src, part),
+            )
+            drain(
+                spark,
+                stream.writeStream.format("parquet")
+                .option("path", out)
+                .option("checkpointLocation", ckpt),
+            )
+        sink = spark.read.parquet(out)
+        per_id = sink.groupBy("event_id").agg(F.count(F.lit(1)).alias("c"))
+        eo = per_id.agg(
+            ((F.min("c") == 2) & (F.max("c") == 2)).alias("exactly_once")
         )
-    shutil.rmtree(src)  # the result reads only the sink
-
-    sink = spark.read.parquet(out)
-    per_id = sink.groupBy("event_id").agg(F.count(F.lit(1)).alias("c"))
-    eo = per_id.agg(
-        ((F.min("c") == 2) & (F.max("c") == 2)).alias("exactly_once")
-    )
-    return (
-        sink.groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 4).alias("sum_value"),
+        # one row per event type: collected, so the run directory can go
+        result = (
+            sink.groupBy("event_type")
+            .agg(
+                F.count(F.lit(1)).alias("n_events"),
+                F.round(F.sum("value"), 4).alias("sum_value"),
+            )
+            .crossJoin(F.broadcast(eo))
+            .select("event_type", "n_events", "sum_value", "exactly_once")
         )
-        .crossJoin(F.broadcast(eo))
-        .select("event_type", "n_events", "sum_value", "exactly_once")
-        .orderBy("event_type")
-    )
+        rows = result.collect()
+        schema = result.schema
+    finally:
+        shutil.rmtree(run, ignore_errors=True)
+    return spark.createDataFrame(rows, schema).orderBy("event_type")
 
 
 @query(

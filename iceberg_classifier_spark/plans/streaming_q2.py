@@ -11,6 +11,7 @@ for its own signatures plus a key-join against the store.
 from __future__ import annotations
 
 import os
+import shutil
 import tempfile
 import uuid
 
@@ -168,12 +169,16 @@ def streaming_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             store_versions.append(store_dir)
         keys.unpersist()
 
-    drain(
-        spark,
-        staged_stream(spark, sf_dir, "documents", split=doc_thirds)
-        .writeStream.foreachBatch(merge)
-        .option("checkpointLocation", os.path.join(state_root, "_chk")),
-    )
+    # the answer is the collected per-batch stats: no store outlives the call
+    try:
+        drain(
+            spark,
+            staged_stream(spark, sf_dir, "documents", split=doc_thirds)
+            .writeStream.foreachBatch(merge)
+            .option("checkpointLocation", os.path.join(state_root, "_chk")),
+        )
+    finally:
+        shutil.rmtree(state_root, ignore_errors=True)
     return spark.createDataFrame(
         sorted(stats),
         "batch_id bigint, n_docs bigint, n_accepted bigint,"

@@ -10,7 +10,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from iceberg_classifier_spark.plans.registry import query
-from iceberg_classifier_spark.sources.tables import fixture_dir, load, mark_staged
+from iceberg_classifier_spark.sources.tables import fixture_dir, load
 
 _DPP_DAYS = ("2024-01-05", "2024-01-12", "2024-01-19")
 
@@ -18,8 +18,7 @@ _DPP_DAYS = ("2024-01-05", "2024-01-12", "2024-01-19")
 def _day_partitioned_events(spark: SparkSession, sf_dir: str, kind: str) -> str:
     """Stage events as a day-partitioned parquet table plus a tiny
     campaign-day dim table (once per testdata fingerprint)."""
-    path, built = fixture_dir(sf_dir, kind, "events")
-    if not built:
+    def build(path: str) -> None:
         e = load(spark, sf_dir, "events").withColumn("day", F.to_date("ts"))
         e.write.mode("overwrite").partitionBy("day").parquet(path + "/fact")
         spark.createDataFrame(
@@ -33,8 +32,8 @@ def _day_partitioned_events(spark: SparkSession, sf_dir: str, kind: str) -> str:
         ).select(
             F.to_date("day_s").alias("day"), "label", "active"
         ).write.mode("overwrite").parquet(path + "/dim")
-        mark_staged(path)
-    return path
+
+    return fixture_dir(sf_dir, kind, "events", build)
 
 
 @query(
@@ -123,8 +122,7 @@ def dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     neighbor partitions are never opened (partition pruning on the
     read-back too).
     """
-    path, built = fixture_dir(sf_dir, "dynovw_events", "events")
-    if not built:
+    def build(path: str) -> None:
         e = load(spark, sf_dir, "events").withColumn("day", F.to_date("ts"))
         e.write.mode("overwrite").partitionBy("day").parquet(path)
         curated = e.where(
@@ -137,8 +135,8 @@ def dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
             curated.write.mode("overwrite").partitionBy("day").parquet(path)
         finally:
             spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-        mark_staged(path)
-    r = spark.read.parquet(path)
+
+    r = spark.read.parquet(fixture_dir(sf_dir, "dynovw_events", "events", build))
     lo = F.lit(_OVW_DAY).cast("date") - 1
     hi = F.lit(_OVW_DAY).cast("date") + 1
     return (

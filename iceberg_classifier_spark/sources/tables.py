@@ -126,24 +126,40 @@ def parquet_column_bounds(sf_dir: str, name: str, column: str):
         return None
 
 
-def fixture_dir(sf_dir: str, kind: str, table: str) -> tuple[str, bool]:
-    """Staging dir under /tmp keyed by the source parquet's (mtime, size)
-    fingerprint. Returns ``(path, already_built)``. Driver-regenerated
-    testdata changes the fingerprint, so a fresh dataset can never reuse a
-    stale fixture, while repeat runs on the same dataset skip the rewrite.
-    Mark completion with :func:`mark_staged` AFTER the write finishes (a
-    killed mid-write run must not look built)."""
+def fixture_dir(sf_dir: str, kind: str, table: str, build) -> str:
+    """Path of the fixture ``kind`` derived from ``table``, staged once in
+    a temp directory. Keyed on the source file's real path and its
+    (mtime, size) fingerprint: regenerated testdata never reuses a stale
+    fixture, a relative ``sf_dir`` shares the stage of its absolute form,
+    and two checkouts with the same frame basename never share one.
+    ``build(path)`` writes the fixture into a fresh private directory that
+    is renamed into place when it returns, so a killed or concurrent
+    build is never read half-written."""
+    import hashlib
+    import shutil
     import tempfile
+    import uuid
 
-    src = os.stat(table_path(sf_dir, table))
+    src = os.path.realpath(table_path(sf_dir, table))
+    st = os.stat(src)
+    key = f"{src}|{st.st_mtime_ns}|{st.st_size}".encode()
     path = os.path.join(
         tempfile.gettempdir(),
-        f"icebergspark_{kind}_{os.path.basename(os.path.normpath(sf_dir))}"
-        f"_{src.st_mtime_ns:x}_{src.st_size:x}",
+        f"icebergspark_{kind}_{hashlib.sha256(key).hexdigest()[:16]}",
     )
-    return path, os.path.exists(os.path.join(path, "_STAGED"))
-
-
-def mark_staged(path: str) -> None:
-    os.makedirs(path, exist_ok=True)
-    open(os.path.join(path, "_STAGED"), "w").close()
+    if os.path.isdir(path):
+        return path
+    tmp = f"{path}.{uuid.uuid4().hex[:8]}"
+    os.makedirs(tmp)
+    try:
+        build(tmp)
+    except BaseException:
+        shutil.rmtree(tmp, ignore_errors=True)
+        raise
+    try:
+        os.rename(tmp, path)
+    except OSError:
+        shutil.rmtree(tmp)
+        if not os.path.isdir(path):  # not a stage another caller renamed first
+            raise
+    return path

@@ -3,10 +3,10 @@
 Every streaming builder reads through one source and runs through one
 drain:
 
-- ``staged_stream`` stages a table as a directory of arriving files (a
-  symlink to the file, or ordered parts from a ``split`` function, one
-  part per micro-batch) and opens ``readStream`` on it with the raw file
-  schema;
+- ``staged_stream`` stages a table through ``tables.fixture_dir`` as a
+  directory of arriving files (a symlink to the file, or ordered parts
+  from a ``split`` function) and opens ``readStream`` on it with the raw
+  file schema, one file per micro-batch;
 - ``drain`` runs a query with the availableNow trigger under pinned
   shuffle partitions and waits for it; ``drain_to_table`` is its
   memory-sink variant and returns the sink as a table.
@@ -19,9 +19,7 @@ stream with late data bounded by the watermark.
 
 from __future__ import annotations
 
-import hashlib
 import os
-import shutil
 import tempfile
 import uuid
 from contextlib import contextmanager
@@ -30,7 +28,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter
 
-from iceberg_classifier_spark.sources.tables import normalize_ts, table_path
+from iceberg_classifier_spark.sources.tables import (
+    fixture_dir,
+    normalize_ts,
+    table_path,
+)
 
 
 @contextmanager
@@ -64,60 +66,18 @@ def drain_to_table(spark: SparkSession, df: DataFrame, mode: str) -> DataFrame:
     return spark.table(sink)
 
 
-def file_stream(
-    spark: SparkSession, sf_dir: str, table: str, path: str, per_file: bool
-) -> DataFrame:
+def file_stream(spark: SparkSession, sf_dir: str, table: str, path: str) -> DataFrame:
     """``readStream`` over the directory ``path`` with the raw schema of
     ``table`` (ts stays long nanos under the nanosAsLong flag, NOT the
-    converted schema from tables.load); ``per_file`` makes each file its
-    own micro-batch, in mtime order. events' ts is normalized to µs."""
+    converted schema from tables.load), one file per micro-batch in mtime
+    order. events' ts is normalized to µs."""
     schema = spark.read.parquet(os.path.realpath(table_path(sf_dir, table))).schema
-    reader = spark.readStream.schema(schema)
-    if per_file:
-        reader = reader.option("maxFilesPerTrigger", "1")
-    df = reader.parquet(path)
-    return normalize_ts(df) if table == "events" else df
-
-
-def _stage(sf_dir: str, table: str, split) -> str:
-    """Staging directory for the table as a stream of files: a symlink to
-    the file when ``split`` is None, else the parts ``split(pyarrow
-    table)`` returns, written in order with increasing mtimes
-    (FileStreamSource orders files by mtime). FileStreamSource reads a
-    directory and the testdata ships one file per table; the production
-    layout already is a directory of arriving files. Keyed on the file's real
-    path, (mtime, size) fingerprint and the split's name, so regenerated
-    testdata, a relative ``sf_dir`` or two checkouts sharing a frame
-    basename never meet a stale or foreign stage. Built under a private
-    name and renamed into place, so a half-written stage is never read."""
-    src = os.path.realpath(table_path(sf_dir, table))
-    st = os.stat(src)
-    kind = "link" if split is None else f"{split.__module__}.{split.__qualname__}"
-    key = f"{src}|{st.st_mtime_ns}|{st.st_size}|{kind}".encode()
-    stage = os.path.join(
-        tempfile.gettempdir(),
-        f"stream_{table}_{hashlib.sha256(key).hexdigest()[:16]}",
+    df = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(path)
     )
-    if os.path.isdir(stage):
-        return stage
-    tmp = f"{stage}.{uuid.uuid4().hex[:8]}"
-    os.makedirs(tmp)
-    if split is None:
-        os.symlink(src, os.path.join(tmp, f"{table}.parquet"))
-    else:
-        import pyarrow.parquet as pq
-
-        for i, part in enumerate(split(pq.read_table(src))):
-            path = os.path.join(tmp, f"part-{i}.parquet")
-            pq.write_table(part, path)
-            os.utime(path, (1_700_000_000 + i * 100,) * 2)
-    try:
-        os.rename(tmp, stage)
-    except OSError:
-        shutil.rmtree(tmp)
-        if not os.path.isdir(stage):  # not a stage another caller renamed first
-            raise
-    return stage
+    return normalize_ts(df) if table == "events" else df
 
 
 def staged_stream(
@@ -125,9 +85,26 @@ def staged_stream(
 ) -> DataFrame:
     """The table as a stream: one file (``split`` None), or the ordered
     parts of ``split`` — a named function from a pyarrow table to a list
-    of tables — arriving one part per micro-batch."""
-    stage = _stage(sf_dir, table, split)
-    return file_stream(spark, sf_dir, table, stage, per_file=split is not None)
+    of tables — arriving one part per micro-batch. FileStreamSource reads
+    a directory and the testdata ships one file per table, so the table
+    is staged (tables.fixture_dir) as a directory holding a symlink to the
+    file, or the parts written in order with increasing mtimes; the
+    production layout already is a directory of arriving files."""
+    src = os.path.realpath(table_path(sf_dir, table))
+
+    def build(path: str) -> None:
+        if split is None:
+            os.symlink(src, os.path.join(path, f"{table}.parquet"))
+            return
+        import pyarrow.parquet as pq
+
+        for i, part in enumerate(split(pq.read_table(src))):
+            out = os.path.join(path, f"part-{i}.parquet")
+            pq.write_table(part, out)
+            os.utime(out, (1_700_000_000 + i * 100,) * 2)
+
+    kind = f"stream_{table}_{'link' if split is None else split.__name__}"
+    return file_stream(spark, sf_dir, table, fixture_dir(sf_dir, kind, table, build))
 
 
 def _epoch_ints(table):

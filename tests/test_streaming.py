@@ -29,6 +29,9 @@ def test_relative_sf_dir_stages_like_absolute(spark, sf_dir, tmp_path, monkeypat
     assert len(want) > 0
     for g in got:
         pd.testing.assert_frame_equal(g, want)
+    # both spellings of the frame share one stage
+    stages = [p for p in tmp_path.iterdir() if p.name.startswith("icebergspark_")]
+    assert len(stages) == 1
 
 
 def test_checkpoint_restart_runs_both_drains_every_call(spark, sf_dir, tmp_path, monkeypatch):
@@ -71,6 +74,8 @@ def test_checkpoint_restart_runs_both_drains_every_call(spark, sf_dir, tmp_path,
     for r in results:
         assert len(r) > 0 and r["exactly_once"].all()
     pd.testing.assert_frame_equal(results[0], results[1])
+    # no call leaves its source, checkpoint or sink behind
+    assert not [p for p in tmp_path.iterdir() if p.name.startswith("ckpt_restart_")]
 
 
 def test_parity_fields_record_what_was_compared():
